@@ -18932,7 +18932,7 @@ def oracle_sql() -> dict[str, str]:
                           / (SELECT COUNT(*) FROM conv)) / 60000000.0
                      AS avg_minutes_to_convert
         """,
-        "doc_zipf_slope": """
+        "doc_zipf_slope": r"""
             WITH words AS (
               SELECT UNNEST(regexp_split_to_array(TRIM(LOWER(text)),
                                                   '\s+')) AS w
@@ -18960,7 +18960,7 @@ def oracle_sql() -> dict[str, str]:
                      AS intercept
             FROM s
         """,
-        "doc_bm25_topk": """
+        "doc_bm25_topk": r"""
             WITH words AS (
               SELECT doc_id,
                      UNNEST(regexp_split_to_array(TRIM(LOWER(text)),

@@ -57,6 +57,7 @@ __all__ = [
     "build_weighted_digest_grouped",
     "weighted_digest_partials",
     "partials_df",
+    "PartialSketches",
     "merge_partials",
     "fold_states",
     "sorted_and_agg",
@@ -328,76 +329,86 @@ def sorted_and_agg(
     return sv, ((uv, uc) if want_agg else None)
 
 
+class PartialSketches:
+    """The task half of the two-phase aggregate, shared by every
+    multi-sketch build (``partials_df``, the scan path and
+    ``CheckpointedBuild``): one sketch set, fed one Arrow table or batch at
+    a time. Per call, each column is flattened once (``_column_values``),
+    each integer column gets one ``sorted_and_agg`` prep, and each sketch
+    takes ``update_agg``, ``update_sorted`` or ``update`` in that order of
+    preference. ``rows`` and ``values_seen`` count what was ingested."""
+
+    def __init__(self, sketches: dict[str, tuple[str, SketchSpec]]) -> None:
+        self.names = list(sketches.keys())
+        self.specs = {n: spec for n, (_, spec) in sketches.items()}
+        self.col_of = {n: c for n, (c, _) in sketches.items()}
+        self.cols = sorted(set(self.col_of.values()))
+        # per column: does any sketch on it take (unique, counts) / sorted
+        self.wants = {
+            c: (
+                any(self.specs[n].update_agg is not None
+                    for n in self.names if self.col_of[n] == c),
+                any(self.specs[n].update_sorted is not None
+                    for n in self.names if self.col_of[n] == c),
+            )
+            for c in self.cols
+        }
+        self.sketches = {n: self.specs[n].make() for n in self.names}
+        self.rows = 0
+        self.values_seen = 0
+
+    def ingest(self, data: pa.Table | pa.RecordBatch) -> None:
+        self.rows += data.num_rows
+        vals = {c: _column_values(data.column(c)) for c in self.cols}
+        # token columns are duplicate-heavy: ONE prep per column feeds
+        # every sketch on it — unique+counts for the agg-capable sketches,
+        # the sorted array for sort-tolerant ones (KLL)
+        prep = {
+            c: sorted_and_agg(v, *self.wants[c])
+            for c, v in vals.items()
+            if v.dtype.kind in "iub" and v.shape[0]
+        }
+        for n in self.names:
+            c = self.col_of[n]
+            if not vals[c].shape[0]:
+                continue
+            spec, sk = self.specs[n], self.sketches[n]
+            sv, agg = prep.get(c, (None, None))
+            if spec.update_agg is not None and agg is not None:
+                spec.update_agg(sk, *agg)
+            elif spec.update_sorted is not None and sv is not None:
+                spec.update_sorted(sk, sv)
+            else:
+                spec.update(sk, vals[c])
+        self.values_seen += sum(v.shape[0] for v in vals.values())
+
+    def states(self) -> dict[str, bytes]:
+        """``state_<name>`` -> serialized sketch, the partial-row columns
+        ``merge_partials`` folds."""
+        return {f"state_{n}": sk.to_bytes() for n, sk in self.sketches.items()}
+
+
 def partials_df(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]) -> DataFrame:
     """Phase 1: one row per input partition with a binary state per sketch
     plus lineage metrics (rows / values seen). Single pass over the data for
-    all sketches (shared scan + shared Arrow transfer); integer columns are
-    sorted at most once per batch and shared across sketches (see
-    operators/scan.py for the same dispatch on the scan path)."""
-    cols = sorted({c for c, _ in sketches.values()})
+    all sketches (shared scan + shared Arrow transfer), each Arrow batch fed
+    through ``PartialSketches``."""
     names = list(sketches.keys())
-    specs = {n: spec for n, (_, spec) in sketches.items()}
-    col_of = {n: c for n, (c, _) in sketches.items()}
-    sel = df.select(*cols)
-
+    sel = df.select(*sorted({c for c, _ in sketches.values()}))
     out_fields = [pa.field("rows", pa.int64()), pa.field("values_seen", pa.int64())]
     out_fields += [pa.field(f"state_{n}", pa.binary()) for n in names]
     out_schema = pa.schema(out_fields)
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sks = {n: specs[n].make() for n in names}
-        rows = 0
-        values_seen = 0
-        for batch in batches:
-            rows += batch.num_rows
-            cache: dict[str, np.ndarray] = {}
-            for n in names:
-                c = col_of[n]
-                if c not in cache:
-                    cache[c] = _column_values(batch.column(batch.schema.get_field_index(c)))
-            sort_cache: dict[str, np.ndarray] = {}
-            agg_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for c, vals in cache.items():
-                if vals.dtype.kind not in "iub" or not vals.shape[0]:
-                    continue
-                wa = any(
-                    specs[n].update_agg is not None
-                    for n in names
-                    if col_of[n] == c
-                )
-                ws = any(
-                    specs[n].update_sorted is not None
-                    for n in names
-                    if col_of[n] == c
-                )
-                sv, agg = sorted_and_agg(vals, wa, ws)
-                if sv is not None:
-                    sort_cache[c] = sv
-                if agg is not None:
-                    agg_cache[c] = agg
-            for n in names:
-                c = col_of[n]
-                vals = cache[c]
-                if not vals.shape[0]:
-                    continue
-                if specs[n].update_agg is not None and c in agg_cache:
-                    uv, uc = agg_cache[c]
-                    specs[n].update_agg(sks[n], uv, uc)
-                elif specs[n].update_sorted is not None and c in sort_cache:
-                    specs[n].update_sorted(sks[n], sort_cache[c])
-                else:
-                    specs[n].update(sks[n], vals)
-            values_seen += sum(v.shape[0] for v in cache.values())
-        arrays = [
-            pa.array([rows], pa.int64()),
-            pa.array([values_seen], pa.int64()),
-        ]
-        arrays += [pa.array([sks[n].to_bytes()], pa.binary()) for n in names]
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
     schema_str = "rows long, values_seen long, " + ", ".join(
         f"state_{n} binary" for n in names
     )
+
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        part = PartialSketches(sketches)
+        for batch in batches:
+            part.ingest(batch)
+        row = {"rows": part.rows, "values_seen": part.values_seen}
+        yield pa.RecordBatch.from_pylist([{**row, **part.states()}], schema=out_schema)
+
     return sel.mapInArrow(build, schema_str)
 
 
@@ -515,10 +526,45 @@ def build_weighted_digest_grouped(
     deserialize with ``TDigest.from_bytes``."""
     import pandas as pd
 
-    from ..sketch.tdigest import TDigest
+    def feed(d, sub: "pd.DataFrame") -> int:
+        # value/weight nulls must drop JOINTLY (same rule as the global
+        # weighted_digest_partials) or the arrays misalign
+        v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
+            np.float64, copy=False
+        )
+        w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
+            np.float64, copy=False
+        )
+        keep = ~(np.isnan(v) | np.isnan(w))
+        if not keep.all():
+            v, w = v[keep], w[keep]
+        if v.shape[0]:
+            d.push(v, w)
+        return v.shape[0]
 
-    spec = _mk_tdigest(delta)
-    sel = df.select(*group_cols, value_col, weight_col)
+    return _grouped_build(
+        df, group_cols, [value_col, weight_col], _mk_tdigest(delta), feed
+    )
+
+
+def _grouped_build(
+    df: DataFrame,
+    group_cols: list[str],
+    value_cols: list[str],
+    spec: SketchSpec,
+    feed: Callable[[Any, Any], int],
+) -> DataFrame:
+    """Grouped two-phase scaffold: per-(partition, key) partial states via
+    ``mapInPandas``, then only the states shuffle to a per-key
+    deterministic fold (``groupBy(keys).applyInPandas``). ``feed(sketch,
+    sub)`` ingests one key's rows of one pandas batch and returns the rows
+    it counts toward the key's ``rows``.
+
+    Returns DataFrame[group_cols..., state binary, rows long] — group keys
+    keep their NATIVE Spark types."""
+    import pandas as pd
+
+    sel = df.select(*group_cols, *value_cols)
     part_schema = (
         ", ".join(
             f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
@@ -527,32 +573,27 @@ def build_weighted_digest_grouped(
     )
 
     def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        # sketches keyed by group tuple, accumulated across all batches of
+        # this partition; grouping itself is pandas-vectorized (hash groupby)
         acc: dict[tuple, Any] = {}
         counts: dict[tuple, int] = {}
         for pdf in pdfs:
+            # dropna=False: a NULL group key is a real group (Spark's own
+            # groupBy keeps it; pandas' default silently drops the rows)
             for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
                 if not isinstance(kr, tuple):
                     kr = (kr,)
-                # value/weight nulls must drop JOINTLY (same rule as the
-                # global weighted_digest_partials) or the arrays misalign
-                v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
-                    np.float64, copy=False
-                )
-                w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
-                    np.float64, copy=False
-                )
-                keep = ~(np.isnan(v) | np.isnan(w))
-                if not keep.all():
-                    v, w = v[keep], w[keep]
                 if kr not in acc:
-                    acc[kr] = TDigest(delta)
+                    acc[kr] = spec.make()
                     counts[kr] = 0
-                if v.shape[0]:
-                    acc[kr].push(v, w)
-                    counts[kr] += v.shape[0]
+                counts[kr] += feed(acc[kr], sub)
         if acc:
             ks = list(acc.keys())
             out = {
+                # null group keys (None, or NaN from pandas' null coding)
+                # stay NULL in the output — Spark's groupBy keeps the null
+                # group in the merge phase, same as its own aggregations;
+                # non-null keys pass through with their native values
                 c: [
                     None if (k[i] is None or k[i] != k[i]) else k[i]
                     for k in ks
@@ -566,6 +607,8 @@ def build_weighted_digest_grouped(
     parts = sel.mapInPandas(partial, part_schema)
 
     def final_merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        # shared deterministic balanced fold: O(log P) recompression depth
+        # per key (a linear left fold recompresses O(P) times sequentially)
         merged = fold_states([bytes(b) for b in pdf["state"]], spec)
         out = {c: [pdf[c].iloc[0]] for c in group_cols}
         out["state"] = [merged]
@@ -636,79 +679,28 @@ def build_sketch_grouped(
     Returns DataFrame[group_cols..., state binary, rows long] — group keys
     keep their NATIVE Spark types (round 1 stringified them, losing key
     types on output)."""
-    import pandas as pd
-
-    sel = df.select(*group_cols, column)
-    part_schema = (
-        ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-        )
-        + ", state binary, rows long"
-    )
     is_list = df.schema[column].dataType.typeName() == "array"
 
-    def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # sketches keyed by group tuple, accumulated across all batches of
-        # this partition; grouping itself is pandas-vectorized (hash groupby)
-        acc: dict[tuple, Any] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in pdfs:
-            # dropna=False: a NULL group key is a real group (Spark's own
-            # groupBy keeps it; pandas' default silently drops the rows)
-            for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(kr, tuple):
-                    kr = (kr,)
-                if is_list:
-                    arrs = [
-                        a for a in sub[column].to_numpy() if a is not None
-                    ]
-                    vals = np.concatenate(arrs) if arrs else np.empty(0)
-                else:
-                    vals = sub[column].to_numpy()
-                    if vals.dtype.kind == "f":
-                        # nullable numerics arrive as float64 + NaN; the
-                        # batch path drops nulls (_column_values) — the
-                        # grouped path must match or results diverge
-                        vals = vals[~np.isnan(vals)]
-                    elif vals.dtype == object:
-                        vals = np.asarray(
-                            [v for v in vals if v is not None], dtype=object
-                        )
-                if kr not in acc:
-                    acc[kr] = spec.make()
-                    counts[kr] = 0
-                if vals.shape[0]:
-                    spec.update(acc[kr], vals)
-                counts[kr] += len(sub)
-        if acc:
-            ks = list(acc.keys())
-            out = {
-                # null group keys (None, or NaN from pandas' null coding)
-                # stay NULL in the output — Spark's groupBy keeps the null
-                # group in the merge phase, same as its own aggregations;
-                # non-null keys pass through with their native values
-                c: [
-                    None if (k[i] is None or k[i] != k[i]) else k[i]
-                    for k in ks
-                ]
-                for i, c in enumerate(group_cols)
-            }
-            out["state"] = [acc[k].to_bytes() for k in ks]
-            out["rows"] = [counts[k] for k in ks]
-            yield pd.DataFrame(out)
+    def feed(sk, sub) -> int:
+        if is_list:
+            arrs = [a for a in sub[column].to_numpy() if a is not None]
+            vals = np.concatenate(arrs) if arrs else np.empty(0)
+        else:
+            vals = sub[column].to_numpy()
+            if vals.dtype.kind == "f":
+                # nullable numerics arrive as float64 + NaN; the batch path
+                # drops nulls (_column_values) — the grouped path must
+                # match or results diverge
+                vals = vals[~np.isnan(vals)]
+            elif vals.dtype == object:
+                vals = np.asarray(
+                    [v for v in vals if v is not None], dtype=object
+                )
+        if vals.shape[0]:
+            spec.update(sk, vals)
+        return len(sub)
 
-    parts = sel.mapInPandas(partial, part_schema)
-
-    def final_merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # shared deterministic balanced fold: O(log P) recompression depth
-        # per key (a linear left fold recompresses O(P) times sequentially)
-        merged = fold_states([bytes(b) for b in pdf["state"]], spec)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["state"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
-
-    return parts.groupBy(*group_cols).applyInPandas(final_merge, part_schema)
+    return _grouped_build(df, group_cols, [column], spec, feed)
 
 
 def _mk_bottomk(k: int = 1024, strings: bool = False):

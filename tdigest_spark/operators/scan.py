@@ -20,17 +20,20 @@ per-split lineage metrics (per BASELINE.json north_rule).
 The general DataFrame path (``aggregate.partials_df``) remains the right
 choice when the input is already a transformed DataFrame; this module is the
 performance path for sketching columns straight off a parquet/Iceberg table.
+Both feed the same partial kernel, ``aggregate.PartialSketches``; here its
+one split loop is ``ingest_splits``, which ``plans.checkpoint`` also runs.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 import numpy as np
 
 from .aggregate import (
+    PartialSketches,
     SketchSpec,
     _column_values,
     fold_states,
@@ -40,6 +43,7 @@ from .aggregate import (
 
 __all__ = [
     "parquet_splits",
+    "ingest_splits",
     "scan_partials_rdd",
     "build_sketches_scan",
     "build_sketch_grouped_scan",
@@ -95,9 +99,55 @@ def parquet_splits(
     return splits
 
 
-# one extractor for both build paths: the list-flatten fast-path guard
-# must never diverge between them (they are asserted bit-identical)
+# the kernel's extractor (``PartialSketches`` flattens with it), re-exported
+# for the driver-side replay of the scan kernel
 _column_values_arrow = _column_values
+
+
+def _read_split(sp: _Split, cols: list[str], filter_expr: Any | None):
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    if filter_expr is not None:
+        frag = pads.dataset(sp.path, format="parquet")
+        # dataset-level split: take only this split's row groups
+        frag = list(frag.get_fragments())[0].subset(
+            row_group_ids=list(sp.row_groups)
+        )
+        return frag.to_table(columns=cols, filter=filter_expr, use_threads=False)
+    # use_threads=False: each of the ~cores concurrent worker processes
+    # gets a cores-sized Arrow CPU pool by default — cores^2 runnable
+    # threads; measured 4-14x slower than single-threaded decode per task
+    # at local[32]
+    return pq.ParquetFile(sp.path).read_row_groups(
+        list(sp.row_groups), columns=cols, use_threads=False
+    )
+
+
+def ingest_splits(
+    splits: Iterable[_Split],
+    sketches: dict[str, tuple[str, SketchSpec]],
+    filter_expr: Any | None = None,
+) -> tuple[PartialSketches, list[dict]]:
+    """The one split loop of the scan and checkpoint builds: read each
+    split (pruned by ``filter_expr`` when given), feed it to one
+    ``PartialSketches`` in order, and record per-split lineage (path, row
+    groups, rows, wall_ms)."""
+    part = PartialSketches(sketches)
+    lineage: list[dict] = []
+    for sp in splits:
+        t0 = time.perf_counter()
+        tbl = _read_split(sp, part.cols, filter_expr)
+        part.ingest(tbl)
+        lineage.append(
+            {
+                "path": sp.path,
+                "row_groups": list(sp.row_groups),
+                "rows": tbl.num_rows,
+                "wall_ms": (time.perf_counter() - t0) * 1000.0,
+            }
+        )
+    return part, lineage
 
 
 def scan_partials_rdd(
@@ -121,103 +171,20 @@ def scan_partials_rdd(
     parquet read (row-group stats pruning + decode-time filtering).
     """
     splits = parquet_splits(paths, target_rows_per_split)
-    names = list(sketches.keys())
-    specs = {n: spec for n, (_, spec) in sketches.items()}
-    col_of = {n: c for n, (c, _) in sketches.items()}
-    cols = sorted({c for c, _ in sketches.values()})
 
     def run_partition(it: Iterator[_Split]) -> Iterator[dict]:
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
-
-        sks = {n: specs[n].make() for n in names}
-        rows = 0
-        values_seen = 0
-        lineage: list[dict] = []
         t_part = time.perf_counter()
-        for sp in it:
-            t0 = time.perf_counter()
-            sp_rows = 0
-            if filter_expr is not None:
-                frag = pads.dataset(sp.path, format="parquet")
-                # dataset-level split: take only this split's row groups
-                frag = list(frag.get_fragments())[0].subset(
-                    row_group_ids=list(sp.row_groups)
-                )
-                tbl = frag.to_table(
-                    columns=cols, filter=filter_expr, use_threads=False
-                )
-            else:
-                # use_threads=False: each of the ~cores concurrent worker
-                # processes gets a cores-sized Arrow CPU pool by default —
-                # cores^2 runnable threads; measured 4-14x slower than
-                # single-threaded decode per task at local[32]
-                tbl = pq.ParquetFile(sp.path).read_row_groups(
-                    list(sp.row_groups), columns=cols, use_threads=False
-                )
-            sp_rows += tbl.num_rows
-            cache: dict[str, np.ndarray] = {}
-            sort_cache: dict[str, np.ndarray] = {}
-            agg_cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-            for c in cols:
-                cache[c] = _column_values_arrow(tbl.column(c))
-                values_seen += cache[c].shape[0]
-                # token columns are duplicate-heavy: ONE sort per column
-                # feeds everything — unique+counts fall out linearly for
-                # the agg-capable sketches, and sort-tolerant sketches
-                # (KLL) consume the sorted array directly. Without this,
-                # every sketch re-sorted the same values independently.
-                if cache[c].dtype.kind in "iub" and cache[c].shape[0]:
-                    wants_agg = any(
-                        specs[n].update_agg is not None
-                        for n in names
-                        if col_of[n] == c
-                    )
-                    wants_sorted = any(
-                        specs[n].update_sorted is not None
-                        for n in names
-                        if col_of[n] == c
-                    )
-                    sv, agg = sorted_and_agg(
-                        cache[c], wants_agg, wants_sorted
-                    )
-                    if sv is not None:
-                        sort_cache[c] = sv
-                    if agg is not None:
-                        agg_cache[c] = agg
-            for n in names:
-                c = col_of[n]
-                vals = cache[c]
-                if not vals.shape[0]:
-                    continue
-                if specs[n].update_agg is not None and c in agg_cache:
-                    uv, uc = agg_cache[c]
-                    specs[n].update_agg(sks[n], uv, uc)
-                elif specs[n].update_sorted is not None and c in sort_cache:
-                    specs[n].update_sorted(sks[n], sort_cache[c])
-                else:
-                    specs[n].update(sks[n], vals)
-            rows += sp_rows
-            lineage.append(
-                {
-                    "path": sp.path,
-                    "row_groups": list(sp.row_groups),
-                    "rows": sp_rows,
-                    "wall_ms": (time.perf_counter() - t0) * 1000.0,
-                }
-            )
+        part, lineage = ingest_splits(it, sketches, filter_expr)
         if not lineage:
             return
-        out = {
-            "rows": rows,
-            "values_seen": values_seen,
+        yield {
+            "rows": part.rows,
+            "values_seen": part.values_seen,
             "n_splits": len(lineage),
             "wall_ms": (time.perf_counter() - t_part) * 1000.0,
             "lineage": lineage,
+            **part.states(),
         }
-        for n in names:
-            out[f"state_{n}"] = sks[n].to_bytes()
-        yield out
 
     sc = spark.sparkContext
     if partitions is None:

@@ -2,9 +2,12 @@
 
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". The unit of work is a *split* (file + row-group range, from
-``operators.scan.parquet_splits``); each completed batch of splits writes
-one parquet checkpoint file containing its serialized sketch states plus
-lineage (paths, row groups, rows, values, wall_ms, attempt timestamps).
+``operators.scan.parquet_splits``); each batch of splits runs through the
+scan path's split loop (``operators.scan.ingest_splits``, which feeds the
+shared ``operators.aggregate.PartialSketches`` kernel), and each completed
+batch writes one parquet checkpoint file containing its serialized sketch
+states plus lineage (paths, row groups, rows, values, wall_ms, attempt
+timestamps).
 A resumed run lists the checkpoint dir, re-derives the full split set from
 the (immutable) input, and schedules only the difference — then merges old
 and new partial states into the final sketches.
@@ -34,7 +37,7 @@ from typing import Any
 import pyarrow as pa
 
 from ..operators.aggregate import SketchSpec, merge_partials
-from ..operators.scan import parquet_splits
+from ..operators.scan import _normalize_paths, ingest_splits, parquet_splits
 from . import fsio
 
 __all__ = ["CheckpointedBuild"]
@@ -120,99 +123,30 @@ class CheckpointedBuild:
         return [(_batch_key(b), b) for b in batches]
 
     def run(self, spark, paths: list[str] | str) -> dict[str, Any]:
-        if isinstance(paths, str):
-            import glob
-            import os
-
-            p = paths
-            paths = (
-                sorted(glob.glob(os.path.join(p, "*.parquet")))
-                if os.path.isdir(p)
-                else [p]
-            )
-        plan = self._plan(paths)
+        plan = self._plan(_normalize_paths(paths))
         done = self.completed()
         todo = [(k, b) for k, b in plan if k not in done]
 
         if todo:
             fs0, root0 = fsio.fs_and_path(self.dir)
             fsio.mkdirs(fs0, root0)
-            names, specs, sketch_map = self.names, self.specs, self.sketches
-            out_dir = self.dir
-
+            sketches, out_dir = self.sketches, self.dir
 
             # one Spark partition per batch: the batch is the atomic unit of
             # checkpointing, so task success == batch file durably written
-            def run_batch(batch: tuple[str, list]) -> dict:
+            def run_batch(batch: tuple[str, list]) -> str:
                 key, splits = batch
                 t0 = time.perf_counter()
-                # reuse the scan kernel loop by inlining its per-split work
-                from ..operators.aggregate import sorted_and_agg as _sorted_and_agg
-                from ..operators.scan import _column_values_arrow
-
-                import pyarrow.parquet as _pq
-
-                sks = {n: specs[n].make() for n in names}
-                cols = sorted({c for c, _ in sketch_map.values()})
-                col_of = {n: c for n, (c, _) in sketch_map.items()}
-                rows = 0
-                values_seen = 0
-                lineage = []
-                for sp in splits:
-                    ts = time.perf_counter()
-                    tbl = _pq.ParquetFile(sp.path).read_row_groups(
-                        list(sp.row_groups), columns=cols, use_threads=False
-                    )
-                    rows += tbl.num_rows
-                    cache = {c: _column_values_arrow(tbl.column(c)) for c in cols}
-                    values_seen += sum(v.shape[0] for v in cache.values())
-                    # same shared one-prep-per-column dispatch as the scan
-                    # kernel (sorted_and_agg: bincount or sort once, feed
-                    # every sketch on the column)
-                    prep: dict = {}
-                    for c, vals in cache.items():
-                        if vals.dtype.kind in "iub" and vals.shape[0]:
-                            wa = any(
-                                specs[n].update_agg is not None
-                                for n in names
-                                if col_of[n] == c
-                            )
-                            ws = any(
-                                specs[n].update_sorted is not None
-                                for n in names
-                                if col_of[n] == c
-                            )
-                            prep[c] = _sorted_and_agg(vals, wa, ws)
-                    for n in names:
-                        c = col_of[n]
-                        vals = cache[c]
-                        if not vals.shape[0]:
-                            continue
-                        sv, agg = prep.get(c, (None, None))
-                        if specs[n].update_agg is not None and agg is not None:
-                            specs[n].update_agg(sks[n], *agg)
-                        elif specs[n].update_sorted is not None and sv is not None:
-                            specs[n].update_sorted(sks[n], sv)
-                        else:
-                            specs[n].update(sks[n], vals)
-                    lineage.append(
-                        {
-                            "path": sp.path,
-                            "row_groups": list(sp.row_groups),
-                            "rows": tbl.num_rows,
-                            "wall_ms": (time.perf_counter() - ts) * 1000.0,
-                        }
-                    )
+                part, lineage = ingest_splits(splits, sketches)
                 row = {
                     "batch_key": key,
-                    "rows": rows,
-                    "values_seen": values_seen,
+                    "rows": part.rows,
+                    "values_seen": part.values_seen,
                     "wall_ms": (time.perf_counter() - t0) * 1000.0,
                     "completed_at": time.time(),
                     "lineage": json.dumps(lineage),
+                    **part.states(),
                 }
-                for n in names:
-                    row[f"state_{n}"] = sks[n].to_bytes()
                 # idempotent durable write: same batch -> same file name;
                 # tmp + move so list-based readers never see torn files
                 # (resolved per task: executor-side fs, works for URIs too)
@@ -223,7 +157,7 @@ class CheckpointedBuild:
                 )
                 # the durable file is the result; don't pickle ~MB of state
                 # bytes back to the driver just to be discarded by count()
-                return row["batch_key"]
+                return key
 
             sc = spark.sparkContext
             sc.parallelize(todo, len(todo)).map(run_batch).count()

@@ -277,6 +277,27 @@ def _read_partition_mor(partition: _FilePartition):
             yield from tbl.combine_chunks().to_batches()
 
 
+def _read_file_partition(partition):
+    """The one worker-side read of a planned data file, shared by the
+    batch and the stream reader: merge-on-read when any delete applies,
+    else plain batches projected onto the current schema."""
+    # filters can prune EVERY file; PySpark substitutes [None] for an
+    # empty partition list, so None means "empty result", not a bug
+    if partition is None:
+        return
+    if (
+        partition.pos_deletes
+        or partition.eq_deletes
+        or getattr(partition, "dvs", ())
+    ):
+        yield from _read_partition_mor(partition)
+    elif partition.mapping is not None:
+        for batch in _read_parquet_batches(partition.path):
+            yield _project_batch(batch, partition.mapping)
+    else:
+        yield from _read_parquet_batches(partition.path)
+
+
 def _plan_file_partitions(root, predicates, snapshot_id):
     """Driver-side scan plan shared by the batch reader and the streaming
     source's initial batch: a predicate/partition-pruned MOR plan with the
@@ -366,21 +387,7 @@ class _StaticIcebergReader(DataSourceReader):
         )
 
     def read(self, partition):
-        # filters can prune EVERY file; PySpark substitutes [None] for an
-        # empty partition list, so None means "empty result", not a bug
-        if partition is None:
-            return
-        if (
-            partition.pos_deletes
-            or partition.eq_deletes
-            or getattr(partition, "dvs", ())
-        ):
-            yield from _read_partition_mor(partition)
-        elif partition.mapping is not None:
-            for batch in _read_parquet_batches(partition.path):
-                yield _project_batch(batch, partition.mapping)
-        else:
-            yield from _read_parquet_batches(partition.path)
+        yield from _read_file_partition(partition)
 
 
 @dataclass
@@ -834,19 +841,7 @@ class _StaticIcebergStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition):
-        if partition is None:
-            return
-        if (
-            partition.pos_deletes
-            or partition.eq_deletes
-            or getattr(partition, "dvs", ())
-        ):
-            yield from _read_partition_mor(partition)
-        elif partition.mapping is not None:
-            for batch in _read_parquet_batches(partition.path):
-                yield _project_batch(batch, partition.mapping)
-        else:
-            yield from _read_parquet_batches(partition.path)
+        yield from _read_file_partition(partition)
 
     def commit(self, end: dict) -> None:
         pass  # progress is durable in Spark's checkpoint, not the table

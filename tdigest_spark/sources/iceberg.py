@@ -74,6 +74,9 @@ def encode_deletion_vector(positions) -> bytes:
     """Serialize row positions as the DV blob: magic, varint cardinality,
     then delta-varints over the sorted deduplicated positions."""
     pos = sorted(set(int(p) for p in positions))
+    if pos and pos[0] < 0:
+        # a negative varint never shifts to zero: refuse, don't spin
+        raise ValueError(f"negative row position in deletion vector: {pos[0]}")
     out = [_DV_MAGIC]
 
     def varint(n: int) -> bytes:

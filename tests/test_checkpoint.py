@@ -101,6 +101,47 @@ def test_lineage_metrics_shape(spark, seq_path, ckpt_dir):
     assert sum(r["n_splits"] for r in m) == 8
 
 
+@pytest.mark.parametrize("splits_per_batch", [2, 4])
+def test_checkpoint_states_equal_scan_build(
+    spark, seq_path, ckpt_dir, splits_per_batch
+):
+    """The checkpoint and scan builds share one split loop: with one scan
+    partition per checkpoint batch (same splits, same order) every sketch
+    state must come out byte-identical, order-sensitive ones included."""
+    from tdigest_spark.operators.aggregate import (
+        BLOOM_INTS,
+        CMS_INTS,
+        DDSKETCH_SPEC,
+        KLL_SPEC,
+        MG_SPEC,
+    )
+    from tdigest_spark.operators.scan import build_sketches_scan, parquet_splits
+
+    sketches = {
+        "td_tokens": ("tokens", TDIGEST(0.01)),
+        "td_ntok": ("n_tok", TDIGEST(0.01)),
+        "kll": ("tokens", KLL_SPEC(200)),
+        "mg": ("tokens", MG_SPEC(32)),
+        "dd": ("n_tok", DDSKETCH_SPEC(0.01)),
+        "hll": ("tokens", HLL_INTS(12)),
+        "cms": ("tokens", CMS_INTS(5, 4096, 32)),
+        "bloom": ("tokens", BLOOM_INTS(20_000, 0.01)),
+    }
+    files = _files(seq_path)
+    n_splits = len(parquet_splits(files, 2_000))
+    assert n_splits == 8
+    ckpt = CheckpointedBuild(
+        ckpt_dir, sketches, target_rows_per_split=2_000,
+        splits_per_batch=splits_per_batch,
+    ).run(spark, files)
+    scan = build_sketches_scan(
+        spark, files, sketches, target_rows_per_split=2_000,
+        partitions=n_splits // splits_per_batch,
+    )
+    for name in sketches:
+        assert ckpt[name].to_bytes() == scan[name].to_bytes(), name
+
+
 def test_torn_checkpoint_file_is_redone(spark, seq_path, ckpt_dir):
     cb = CheckpointedBuild(
         ckpt_dir, SKETCHES, target_rows_per_split=2_000, splits_per_batch=2

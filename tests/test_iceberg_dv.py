@@ -38,6 +38,11 @@ def test_dv_codec_strict_magic():
         decode_deletion_vector(b"PAR1\x00\x00")
 
 
+def test_dv_encode_rejects_negative_position():
+    with pytest.raises(ValueError, match="negative"):
+        encode_deletion_vector([3, -1])
+
+
 def _table(tmp_path, n_files=2, rows=10):
     root = tmp_path / "dvtbl"
     W.create_table(root, ts_ms=1000)
