@@ -13,6 +13,7 @@ Statistical accuracy at scale is covered by tests/ and bench.py.
 from __future__ import annotations
 
 from collections.abc import Callable
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +35,15 @@ def _scan_build(spark: SparkSession, sf_dir: str, table: str, sketches: dict):
         spark, f"{sf_dir}/{table}.parquet", sketches,
         target_rows_per_split=200_000,
     )
+
+
+def _sql_round(x: float, digits: int = 6) -> float:
+    """Round as the DuckDB oracles' ``ROUND(x, digits)`` does on a DOUBLE:
+    ``std::round(x * 10^digits) / 10^digits``, halves away from zero.
+    ``np.round`` rounds halves to even, so on an exact binary half
+    (48.0390625) it differs from the oracle in the last digit."""
+    m = 10.0**digits
+    return float(Decimal(x * m).to_integral_value(ROUND_HALF_UP)) / m
 
 
 # --------------------------------------------------------------------------
@@ -3269,15 +3279,15 @@ def tdigest_quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _scan_build(spark, sf_dir, "lineitem", {"s": ("l_quantity", TDIGEST(0.01))})["s"]
     ps = [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]
-    rows = [(p, float(np.round(d.quantile(p), 6))) for p in ps]
+    rows = [(p, _sql_round(d.quantile(p))) for p in ps]
     return spark.createDataFrame(rows, "p double, q double").orderBy("p")
 
 
 def tdigest_tree_merged_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phase-2 scale path end-to-end: per-partition partial states merged
-    by the DETERMINISTIC distributed tree rounds (tree_merge_states —
-    sorted rank groups, log-depth fan-in; the treeAggregate analogue per
-    the north_star) instead of the driver-side fold. Singleton-value
+    by the DETERMINISTIC distributed fan-in (tree_merge_states — groups
+    fixed by partition index, one shuffle per level, one Spark job; the
+    treeAggregate shape) instead of the driver-side fold. Singleton-value
     centroids make the result exact, so the oracle equals the plain
     quantile interpolation SQL."""
     from tdigest_spark.operators.aggregate import (
@@ -3292,7 +3302,7 @@ def tdigest_tree_merged_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     blob = tree_merge_states(parts, TDIGEST(0.01), state_col="state_d", fanout=4)
     d = TDigest.from_bytes(blob)
     ps = [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]
-    rows = [(p, float(np.round(d.quantile(p), 6))) for p in ps]
+    rows = [(p, _sql_round(d.quantile(p))) for p in ps]
     return spark.createDataFrame(rows, "p double, q double").orderBy("p")
 
 
@@ -3318,7 +3328,7 @@ def tdigest_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert resumed.to_bytes() == first.to_bytes()
     assert len(metrics) >= 1 and all(m["rows"] > 0 for m in metrics)
     ps = [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]
-    rows = [(p, float(np.round(resumed.quantile(p), 6))) for p in ps]
+    rows = [(p, _sql_round(resumed.quantile(p))) for p in ps]
     return spark.createDataFrame(rows, "p double, q double").orderBy("p")
 
 
@@ -3353,7 +3363,7 @@ def tdigest_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem"), "l_quantity", "l_linenumber", 0.01
     )
     ps = [0.1, 0.25, 0.5, 0.75, 0.9, 0.95]
-    rows = [(p, float(np.round(d.quantile(p), 6))) for p in ps]
+    rows = [(p, _sql_round(d.quantile(p))) for p in ps]
     return spark.createDataFrame(rows, "p double, q double").orderBy("p")
 
 
@@ -3382,7 +3392,7 @@ def tdigest_weighted_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = TDigest.from_bytes(bytes(r["state"]))
         for p in ps:
             rows.append(
-                (r["l_returnflag"], p, float(np.round(d.quantile(p), 6)))
+                (r["l_returnflag"], p, _sql_round(d.quantile(p)))
             )
     return spark.createDataFrame(
         rows, "flag string, p double, q double"

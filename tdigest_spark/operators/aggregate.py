@@ -11,15 +11,19 @@ so the mergeable-UDAF pattern is built explicitly (SURVEY.md §7.6):
       input_hint). ``array<T>`` columns are flattened JVM-side-cheap via the
       Arrow ListArray buffer — no explode, no row amplification, no shuffle.
   phase 2 (merge):    deterministic binary-tree fold over the partial states,
-      either driver-side (states are O(1/delta) bytes — tiny) or as iterative
-      grouped Spark rounds for very large partition counts
-      (treeAggregate-style, per BASELINE.json north_star).
+      either driver-side (states are O(1/delta) bytes — tiny) or, for very
+      large partition counts, as a treeAggregate-shaped fan-in
+      (``tree_merge_states``): each partition folds its states, then each
+      level routes partition i to partition i // fanout with one shuffle
+      and folds there. The levels are planned from the partition count, so
+      the whole fan-in is one Spark job. Groups are fixed by partition
+      index and folded by ``fold_states`` (sorted by bytes), so the result
+      does not depend on scheduling or on the order within a partition.
 
 Scale notes (100 TB / 1000 executors): phase 1 is embarrassingly parallel and
 shuffle-free; the only data movement is #partitions × O(16 KB) states. The
-fan-in path (``tree_merge_states``) keeps every round's group below
-``fanout`` states so no single task ever materializes more than
-fanout × state_size bytes.
+fan-in path keeps every group at ``fanout`` states or fewer, so no single
+task ever materializes more than fanout × state_size bytes.
 """
 
 from __future__ import annotations
@@ -624,45 +628,43 @@ def tree_merge_states(
     state_col: str = "state",
     fanout: int = 16,
 ) -> bytes:
-    """Scale path for very large partial counts: log-depth distributed
-    rounds over serialized states (treeAggregate-style, per BASELINE.json
-    north_star) — each round groups ~``fanout`` states per task and folds
-    them, so the driver only ever receives O(1) states.
+    """Scale path for very large partial counts, shaped like Spark's
+    ``treeAggregate``: each input partition folds its own states, then
+    every level sends partition ``i`` to partition ``i // fanout`` (one
+    shuffle, ``ceil(p / fanout)`` partitions) and folds there, until at
+    most ``fanout`` states remain for the driver to collect and fold.
+    The levels are planned from ``getNumPartitions()``, so the whole
+    fan-in is ONE Spark job; a level's task folds at most ``fanout``
+    states and so does the driver.
 
-    Deterministic by construction, unlike a raw ``treeAggregate`` whose
-    combiner order is scheduling-dependent: every round sorts states by
-    bytes, assigns contiguous rank groups, and folds each group with the
-    shared deterministic ``fold_states`` — t-digest/KLL merges are only
-    associative within the error bound, so merge ORDER must be pinned for
-    run-to-run reproducibility (states are O(16 KB)-O(1 MB); the extra
-    sortBy shuffles touch only state bytes, never data rows)."""
-    from pyspark import StorageLevel
+    Deterministic, unlike a raw ``treeAggregate`` whose combiner order
+    depends on scheduling: group membership is fixed by partition index
+    and each group is folded with ``fold_states``, which sorts by bytes.
+    The result depends only on which states each input partition holds,
+    never on task timing or the order within a partition (t-digest/KLL
+    merges are only associative within the error bound)."""
+    if fanout < 2:
+        raise ValueError(f"fanout must be >= 2, got {fanout}")
 
-    # persist the input states and each round's fold: sortBy (sampling
-    # job) + zipWithIndex + count() + the final collect() each re-execute
-    # their lineage otherwise, so the upstream partials build — including
-    # its data scan — would run ~3x per round
-    rdd = states_df.select(state_col).rdd.map(lambda r: bytes(r[0]))
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    n = rdd.count()
-    if n == 0:
-        rdd.unpersist(blocking=False)
-        return spec.make().to_bytes()
-    while n > fanout:
-        folded = (
-            rdd.sortBy(lambda b: b)
-            .zipWithIndex()
-            .map(lambda bi: (bi[1] // fanout, bi[0]))
-            .groupByKey(numPartitions=max(1, n // fanout))
-            .map(lambda kv: fold_states(list(kv[1]), spec))
+    def fold_part(states: Iterator[bytes]) -> Iterator[bytes]:
+        states = list(states)
+        if states:  # an empty partition emits nothing
+            yield fold_states(states, spec)
+
+    rdd = states_df.select(state_col).rdd.mapPartitions(
+        lambda rows: fold_part(bytes(r[0]) for r in rows)
+    )
+    p = rdd.getNumPartitions()
+    while p > fanout:
+        p = -(-p // fanout)
+        rdd = (
+            rdd.mapPartitionsWithIndex(
+                lambda i, it: ((i // fanout, s) for s in it)
+            )
+            .partitionBy(p, lambda k: k)
+            .mapPartitions(lambda kv: fold_part(s for _, s in kv))
         )
-        folded.persist(StorageLevel.MEMORY_AND_DISK)
-        n = folded.count()
-        rdd.unpersist(blocking=False)
-        rdd = folded
-    out = fold_states(rdd.collect(), spec)
-    rdd.unpersist(blocking=False)
-    return out
+    return fold_states(rdd.collect(), spec)
 
 
 def build_sketch_grouped(

@@ -868,7 +868,7 @@ class _AvroLiteReader(DataSourceReader):
         if not self.dir:
             raise ValueError("avro_lite requires .option('path', <dir>)")
         self.fields = [
-            f["name"] for f in _avro_first_schema(self.dir)["fields"]
+            f["name"] for f in _avro_dir_schema(self.dir)["fields"]
         ]
 
     def partitions(self):
@@ -886,7 +886,11 @@ class _AvroLiteReader(DataSourceReader):
             yield tuple(r.get(f) for f in fields)
 
 
-def _avro_first_schema(path_dir) -> dict:
+def _avro_dir_schema(path_dir) -> dict:
+    """The one writer schema every container under ``path_dir`` shares;
+    a container written with another schema raises ``ValueError`` naming
+    it (reading it with the first schema would turn renamed or missing
+    fields into nulls)."""
     from .avro_lite import read_schema
 
     if not path_dir:
@@ -894,8 +898,14 @@ def _avro_first_schema(path_dir) -> dict:
     files = sorted(Path(path_dir).glob("*.avro"))
     if not files:
         raise ValueError(f"no .avro container files under {path_dir!r}")
-    # header-only read: schema discovery must not decode the file
-    return read_schema(files[0])
+    # header-only reads: schema discovery must not decode any file
+    schema = read_schema(files[0])
+    for f in files[1:]:
+        if read_schema(f) != schema:
+            raise ValueError(
+                f"avro_lite: {f} has a different writer schema than {files[0]}"
+            )
+    return schema
 
 
 _AVRO_TO_SPARK = {
@@ -913,16 +923,16 @@ class AvroLiteDataSource(DataSource):
     """spark.read.format("avro_lite").option("path", dir).load() — a
     distributed reader for Avro object-container files on top of the
     repo's pure-python Avro codec (the one the Iceberg manifests use).
-    The schema comes from the first container's EMBEDDED writer schema
-    (Avro's self-describing property); nullable unions map to nullable
-    Spark columns."""
+    The schema comes from the containers' EMBEDDED writer schema (Avro's
+    self-describing property), which every container must share; nullable
+    unions map to nullable Spark columns."""
 
     @classmethod
     def name(cls) -> str:
         return "avro_lite"
 
     def schema(self) -> str:
-        sch = _avro_first_schema(self.options.get("path"))
+        sch = _avro_dir_schema(self.options.get("path"))
 
         def one(t) -> str:
             if isinstance(t, list):  # ["null", X] nullable union

@@ -561,10 +561,10 @@ def iceberg_scan_entries_static(
                 out["dvs"].append(
                     {
                         "path": _localize(df_rec["file_path"], root),
-                        "referenced": re.sub(
-                            r"^file:/+",
-                            "/",
-                            df_rec["referenced_data_file"],
+                        # re-rooted like file_path, so a relocated
+                        # table's DVs still name its own data files
+                        "referenced": _localize(
+                            df_rec["referenced_data_file"], root
                         ),
                         "seq": (
                             int(e["sequence_number"])

@@ -284,3 +284,36 @@ def test_union_numeric_promotion_and_record_vs_map(tmp_path):
     )
     _, got3 = av.read_container(p)
     assert got3 == [{"v": {"a": 5}}, {"v": {"x": 1, "y": 2}}]
+
+
+def test_avro_lite_source_rejects_mixed_writer_schemas(spark, tmp_path):
+    """Every container must carry the same writer schema: a renamed or
+    missing field would otherwise read back as null under the first
+    file's schema."""
+    from tdigest_spark.sources.datasource import (
+        AvroLiteDataSource,
+        _AvroLiteReader,
+    )
+
+    base = {"type": "record", "name": "r", "fields": [
+        {"name": "id", "type": "long"}, {"name": "name", "type": "string"}]}
+    renamed = {**base, "fields": [
+        {"name": "id", "type": "long"}, {"name": "title", "type": "string"}]}
+    missing = {**base, "fields": [{"name": "id", "type": "long"}]}
+    same = tmp_path / "same"
+    same.mkdir()
+    av.write_container(same / "a.avro", base, [{"id": 1, "name": "x"}])
+    av.write_container(same / "b.avro", base, [{"id": 2, "name": "y"}])
+    spark.dataSource.register(AvroLiteDataSource)
+    rows = spark.read.format("avro_lite").option("path", str(same)).load()
+    assert sorted(tuple(r) for r in rows.collect()) == [(1, "x"), (2, "y")]
+    for other, recs in ((renamed, [{"id": 3, "title": "z"}]), (missing, [{"id": 3}])):
+        mixed = tmp_path / f"mixed_{len(other['fields'])}"
+        mixed.mkdir()
+        av.write_container(mixed / "a.avro", base, [{"id": 1, "name": "x"}])
+        av.write_container(mixed / "b.avro", other, recs)
+        opts = {"path": str(mixed)}
+        with pytest.raises(ValueError, match="b.avro"):
+            AvroLiteDataSource(opts).schema()
+        with pytest.raises(ValueError, match="b.avro"):
+            _AvroLiteReader(opts)

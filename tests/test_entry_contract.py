@@ -71,3 +71,22 @@ def test_readme_query_count_matches_queries():
         f"README claims {m.group(1)} queries; len(queries()) is "
         f"{len(mod.queries())} — update the marker line"
     )
+
+
+def test_sql_round_matches_duckdb_round():
+    """Five t-digest queries round with ``_sql_round`` so that an exact
+    binary half rounds away from zero, as their DuckDB ``ROUND(x, 6)``
+    oracles do (``np.round`` would round it to even)."""
+    import duckdb
+
+    from __spark_entry__ import _sql_round
+
+    cases = [
+        (48.0390625, 6, 48.039063),
+        (-48.0390625, 6, -48.039063),
+        (0.49999999999999994, 0, 0.0),  # just below a half: no round-up
+    ]
+    for x, digits, want in cases:
+        assert _sql_round(x, digits) == want
+        oracle = duckdb.sql(f"SELECT ROUND(CAST({x!r} AS DOUBLE), {digits})")
+        assert oracle.fetchone()[0] == want

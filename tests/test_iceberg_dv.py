@@ -270,3 +270,20 @@ def test_avro_read_schema_matches_container():
             p, schema, [{"a": 1, "b": "x"}, {"a": 2, "b": None}]
         )
         assert avro_lite.read_schema(p) == avro_lite.read_container(p)[0]
+
+
+def test_dv_survives_table_relocation(tmp_path, spark):
+    """A table copied to a new root (and the old root removed) keeps
+    applying its DVs: the DV's referenced data file is re-rooted the same
+    way as the data file paths."""
+    import shutil
+
+    root, _files = _table(tmp_path)
+    W.delete_where_dv(root, [("v", "<", 60)], snapshot_id=2, ts_ms=3000)
+    moved = tmp_path / "moved"
+    shutil.copytree(root, moved)
+    shutil.rmtree(root)
+    e = iceberg_scan_entries_static(str(moved))
+    assert [d["referenced"].startswith(str(moved)) for d in e["dvs"]] == [True]
+    ids = sorted(r.id for r in read_sequences(spark, str(moved)).collect())
+    assert ids == list(range(6, 20))

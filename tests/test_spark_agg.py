@@ -280,7 +280,7 @@ def test_sorted_and_agg_uint64_and_fallback():
 def test_tree_merge_states_deterministic(spark, seq_table):
     """The distributed fan-in must be run-to-run reproducible: t-digest
     merges are only associative within the error bound, so merge order is
-    pinned (sorted rank groups + shared deterministic fold)."""
+    pinned (groups fixed by partition index + shared deterministic fold)."""
     from tdigest_spark.operators.aggregate import TDIGEST, partials_df, tree_merge_states
 
     parts = partials_df(
@@ -291,6 +291,60 @@ def test_tree_merge_states_deterministic(spark, seq_table):
     b = tree_merge_states(parts, TDIGEST(0.01), state_col="state_d", fanout=4)
     parts.unpersist()
     assert a == b  # bit-identical across runs
+
+
+@pytest.mark.parametrize("n_parts", [1, 3, 8, 17])
+def test_tree_merge_states_equals_driver_fold(spark, seq_table, n_parts):
+    """For exact-merge sketches the fan-in must return the driver fold of
+    the same states, byte for byte, whatever the partition count and
+    fanout (levels 0, 1 and 2 deep)."""
+    from tdigest_spark.operators.aggregate import fold_states
+
+    # k_heavy=0: the CMS counter table merges exactly, but its heavy-hitter
+    # list keeps only each intermediate merge's top k, so it would depend
+    # on the merge tree
+    specs = {"h": HLL_INTS(), "c": CMS_INTS(5, 8192, 0)}
+    parts = partials_df(
+        seq_table.repartition(n_parts),
+        {n: ("n_tok", spec) for n, spec in specs.items()},
+    ).cache()
+    rows = parts.collect()
+    for n, spec in specs.items():
+        want = fold_states([bytes(r[f"state_{n}"]) for r in rows], spec)
+        for fanout in (2, 4, 16):
+            got = tree_merge_states(parts, spec, state_col=f"state_{n}", fanout=fanout)
+            assert got == want, (n, fanout)
+    parts.unpersist()
+
+
+def test_tree_merge_states_empty_input(spark):
+    empty = spark.createDataFrame([], "state binary")
+    for df in (empty, empty.repartition(9)):
+        assert tree_merge_states(df, HLL_INTS(), fanout=2) == HLL_INTS().make().to_bytes()
+    with pytest.raises(ValueError, match="fanout"):  # would never shrink
+        tree_merge_states(empty, HLL_INTS(), fanout=1)
+
+
+def test_tree_merge_states_job_count(spark, seq_table):
+    """The whole fan-in runs as one job after the input's own stages: it
+    starts no more Spark jobs than collecting the states does."""
+    sc = spark.sparkContext
+    parts = partials_df(seq_table.repartition(17), {"d": ("n_tok", TDIGEST(0.01))})
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tree = jobs(
+        "tree_merge_jobs",
+        lambda: tree_merge_states(parts, TDIGEST(0.01), state_col="state_d", fanout=4),
+    )
+    plain = jobs("collect_jobs", lambda: parts.select("state_d").collect())
+    assert 0 < tree <= plain
 
 
 def test_build_sketch_grouped_nulls(spark):
