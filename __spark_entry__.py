@@ -3345,7 +3345,7 @@ def tdigest_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert text.startswith("approx.") and "Q2" in text, text
     qs = d.quantile([0.0, 0.25, 0.5, 0.75, 1.0])
     rows = [
-        (p, float(np.round(q, 6)))
+        (p, _sql_round(q))
         for p, q in zip([0.0, 0.25, 0.5, 0.75, 1.0], qs)
     ]
     return spark.createDataFrame(rows, "p double, q double").orderBy("p")
@@ -3422,7 +3422,7 @@ def tdigest_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _scan_build(spark, sf_dir, "lineitem", {"s": ("l_quantity", TDIGEST(0.01))})["s"]
     wins = [(0.0, 1.0), (0.05, 0.95), (0.1, 0.9), (0.25, 0.75)]
     rows = [
-        (lo, hi, float(np.round(d.trimmed_mean(lo, hi), 6))) for lo, hi in wins
+        (lo, hi, _sql_round(d.trimmed_mean(lo, hi))) for lo, hi in wins
     ]
     return spark.createDataFrame(
         rows, "lo double, hi double, tmean double"
@@ -3445,7 +3445,7 @@ def tdigest_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _scan_build(spark, sf_dir, "lineitem", {"s": ("l_quantity", TDIGEST(0.01))})["s"]
     wins = [(0.0, 1.0), (0.05, 0.95), (0.1, 0.9), (0.25, 0.75)]
     rows = [
-        (lo, hi, float(np.round(d.winsorized_mean(lo, hi), 6)))
+        (lo, hi, _sql_round(d.winsorized_mean(lo, hi)))
         for lo, hi in wins
     ]
     return spark.createDataFrame(
@@ -3602,7 +3602,7 @@ def ddsketch_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer check; est as the rounded human-readable value)
     idx = np.rint(np.log(est * (sk.gamma + 1.0) / 2.0) / sk.log_gamma).astype(int)
     rows = [
-        (p, int(i), float(np.round(e, 6))) for p, i, e in zip(ps, idx, est)
+        (p, int(i), _sql_round(e)) for p, i, e in zip(ps, idx, est)
     ]
     return spark.createDataFrame(
         rows, "p double, bucket_idx long, est double"
@@ -3630,8 +3630,8 @@ def ddsketch_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 r.l_returnflag,
                 int(sk.n),
-                float(np.round(p50, 6)),
-                float(np.round(p99, 6)),
+                _sql_round(p50),
+                _sql_round(p99),
             )
         )
     return spark.createDataFrame(
@@ -3746,18 +3746,35 @@ def hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def bloom_partkey_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Bloom filter over lineitem.l_partkey probed with every
-    key present: no false negatives, ever (bit-OR merge preserves this)."""
+    key present: no false negatives, ever (bit-OR merge preserves this).
+    The filter's bytes are broadcast and the distinct keys are probed in
+    ``mapInArrow``, one deserialize per task — no key reaches the
+    driver."""
+    import pyarrow as pa
+
     from tdigest_spark.operators.aggregate import BLOOM_INTS
+    from tdigest_spark.sketch.bloom import BloomFilter
 
     li = _t(spark, sf_dir, "lineitem")
     bf = _scan_build(
         spark, sf_dir, "lineitem", {"s": ("l_partkey", BLOOM_INTS(100_000, 0.01))}
     )["s"]
-    present = [r[0] for r in li.select("l_partkey").distinct().collect()]
-    hits = bf.might_contain_ints(np.array(sorted(present)))
-    rows = [(int(k), bool(h)) for k, h in zip(sorted(present), hits)]
-    return spark.createDataFrame(rows, "l_partkey long, might_contain boolean").orderBy(
-        "l_partkey"
+    bc = spark.sparkContext.broadcast(bf.to_bytes())
+
+    def probe(batches):
+        f = BloomFilter.from_bytes(bc.value)
+        for b in batches:
+            keys = b.column(0).cast(pa.int64())
+            hits = f.might_contain_ints(keys.to_numpy(zero_copy_only=False))
+            yield pa.RecordBatch.from_arrays(
+                [keys, pa.array(hits, pa.bool_())], ["l_partkey", "might_contain"]
+            )
+
+    return (
+        li.select("l_partkey")
+        .distinct()
+        .mapInArrow(probe, "l_partkey long, might_contain boolean")
+        .orderBy("l_partkey")
     )
 
 
@@ -3840,8 +3857,8 @@ def bottomk_jaccard_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (
                     a,
                     b,
-                    float(np.round(sks[a].jaccard(sks[b]), 6)),
-                    float(np.round(it / un, 6)),
+                    _sql_round(sks[a].jaccard(sks[b])),
+                    _sql_round(it / un),
                 )
             )
     du.unpersist()
@@ -3904,9 +3921,9 @@ def theta_event_audience_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (
                     a,
                     b,
-                    float(np.round(sa.union_estimate(sb), 6)),
-                    float(np.round(sa.intersect_estimate(sb), 6)),
-                    float(np.round(sa.a_not_b_estimate(sb), 6)),
+                    _sql_round(sa.union_estimate(sb)),
+                    _sql_round(sa.intersect_estimate(sb)),
+                    _sql_round(sa.a_not_b_estimate(sb)),
                     int(sizes[a] + sizes[b] - it),
                     it,
                     int(sizes[a] - it),
@@ -8894,7 +8911,7 @@ def ams_f2_quantity_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("n") * F.col("n")).alias("f2"))
         .collect()[0].f2
     )
-    rel = float(np.round(abs(float(est) - float(exact)) / float(exact), 6))
+    rel = _sql_round(abs(float(est) - float(exact)) / float(exact))
     return spark.createDataFrame(
         [(est, exact, rel)], "est_f2 long, exact_f2 long, rel_err double"
     )
@@ -8916,10 +8933,10 @@ def moments_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )["m"]
     row = (
         sk.n,
-        float(np.round(sk.mean(), 6)),
-        float(np.round(sk.variance(), 6)),
-        float(np.round(sk.skewness(), 6)),
-        float(np.round(sk.kurtosis(), 6)),
+        _sql_round(sk.mean()),
+        _sql_round(sk.variance()),
+        _sql_round(sk.skewness()),
+        _sql_round(sk.kurtosis()),
     )
     return spark.createDataFrame(
         [row],
@@ -8949,9 +8966,9 @@ def moments_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 r.l_returnflag,
                 sk.n,
-                float(np.round(sk.mean(), 6)),
-                float(np.round(sk.variance(), 6)),
-                float(np.round(sk.skewness(), 6)),
+                _sql_round(sk.mean()),
+                _sql_round(sk.variance()),
+                _sql_round(sk.skewness()),
             )
         )
     return spark.createDataFrame(

@@ -20,6 +20,12 @@ so the mergeable-UDAF pattern is built explicitly (SURVEY.md §7.6):
       index and folded by ``fold_states`` (sorted by bytes), so the result
       does not depend on scheduling or on the order within a partition.
 
+Every build feeds one kernel, ``PartialSketches`` (``_WeightedDigest`` for
+the weighted builds). Grouped builds stay in Arrow too: ``_ingest_by_key``
+splits each batch by key (one hash ``group_by``, one ``take`` per key) and
+feeds each key's rows to that key's kernel inside ``mapInArrow``; the
+per-key fold is ``groupBy(keys).applyInArrow``. No pandas conversion.
+
 Scale notes (100 TB / 1000 executors): phase 1 is embarrassingly parallel and
 shuffle-free; the only data movement is #partitions × O(16 KB) states. The
 fan-in path keeps every group at ``fanout`` states or fewer, so no single
@@ -29,7 +35,7 @@ task ever materializes more than fanout × state_size bytes.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Callable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -461,44 +467,56 @@ def build_sketch(df: DataFrame, column: str, spec: SketchSpec) -> Any:
     return build_sketches(df, {"s": (column, spec)})["s"]
 
 
+class _WeightedDigest:
+    """Weighted t-digest kernel — the reference's ``push(x, n)`` with
+    n != 1 (tdigest.js:82-91) — with the ``PartialSketches`` shape
+    (``ingest`` / ``rows`` / ``states()``), shared by the global and the
+    grouped weighted builds. A row counts only if both its value and its
+    weight are present: nulls drop JOINTLY, or the arrays misalign."""
+
+    def __init__(self, value_col: str, weight_col: str, delta: float) -> None:
+        from ..sketch.tdigest import TDigest
+
+        self.cols = (value_col, weight_col)
+        self.digest = TDigest(delta)
+        self.rows = 0
+
+    def ingest(self, data: pa.Table | pa.RecordBatch) -> None:
+        import pyarrow.compute as pc
+
+        vc, wc = (data.column(c) for c in self.cols)
+        if vc.null_count or wc.null_count:
+            keep = pc.and_(vc.is_valid(), wc.is_valid())
+            vc, wc = vc.filter(keep), wc.filter(keep)
+        v, w = (
+            c.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            for c in (vc, wc)
+        )
+        if v.shape[0]:
+            self.digest.push(v, w)
+            self.rows += v.shape[0]
+
+    def states(self) -> dict[str, bytes]:
+        return {"state_s": self.digest.to_bytes()}
+
+
 def weighted_digest_partials(
     df: DataFrame, value_col: str, weight_col: str, delta: float = 0.01
 ) -> DataFrame:
-    """Phase 1 of the weighted form of the reference's ingest —
-    ``push(x, n)`` with n != 1 (tdigest.js:82-91) — distributed: one
-    t-digest state per partition built from (value, weight) column pairs
-    in a single Arrow pass. Weighted and unweighted builds share the same
-    merge, so ``merge_partials`` finalizes both."""
-    from ..sketch.tdigest import TDigest
-
-    sel = df.select(value_col, weight_col)
-    out_schema = pa.schema(
-        [pa.field("rows", pa.int64()), pa.field("state_s", pa.binary())]
-    )
+    """Phase 1 of the weighted ingest, distributed: one t-digest state per
+    partition built from (value, weight) column pairs in a single Arrow
+    pass (``_WeightedDigest``). Weighted and unweighted builds share the
+    same merge, so ``merge_partials`` finalizes both."""
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        d = TDigest(delta)
-        rows = 0
+        wd = _WeightedDigest(value_col, weight_col, delta)
         for batch in batches:
-            vc, wc = batch.column(0), batch.column(1)
-            # nulls must be dropped JOINTLY or the value/weight arrays
-            # misalign — a row contributes only if both sides are present
-            if vc.null_count or wc.null_count:
-                keep = pc.and_(vc.is_valid(), wc.is_valid())
-                vc, wc = vc.filter(keep), wc.filter(keep)
-            v = vc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            w = wc.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            if v.shape[0]:
-                d.push(v, w)
-                rows += v.shape[0]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([rows], pa.int64()), pa.array([d.to_bytes()], pa.binary())],
-            schema=out_schema,
-        )
+            wd.ingest(batch)
+        yield pa.RecordBatch.from_pylist([{"rows": wd.rows, **wd.states()}])
 
-    return sel.mapInArrow(build, "rows long, state_s binary")
+    return df.select(value_col, weight_col).mapInArrow(
+        build, "rows long, state_s binary"
+    )
 
 
 def build_weighted_digest(
@@ -521,34 +539,71 @@ def build_weighted_digest_grouped(
 ) -> DataFrame:
     """Grouped form of the weighted ingest (VERDICT r3 item 6): one
     weighted t-digest per key, two-phase like ``build_sketch_grouped`` —
-    per-(partition, key) partials built in a vectorized pandas pass, then
-    only O(16 KB) states shuffle to the per-key deterministic fold. Raw
-    rows never shuffle, so weighted quantile monitoring composes with the
-    grouped shape at 100 TB (exchange = #partitions x #keys x state size).
+    per-(partition, key) ``_WeightedDigest`` partials, then only O(16 KB)
+    states shuffle to the per-key deterministic fold. Raw rows never
+    shuffle, so weighted quantile monitoring composes with the grouped
+    shape at 100 TB (exchange = #partitions x #keys x state size).
 
     Returns DataFrame[group_cols..., state binary, rows long]; states
     deserialize with ``TDigest.from_bytes``."""
-    import pandas as pd
-
-    def feed(d, sub: "pd.DataFrame") -> int:
-        # value/weight nulls must drop JOINTLY (same rule as the global
-        # weighted_digest_partials) or the arrays misalign
-        v = pd.to_numeric(sub[value_col], errors="coerce").to_numpy(
-            np.float64, copy=False
-        )
-        w = pd.to_numeric(sub[weight_col], errors="coerce").to_numpy(
-            np.float64, copy=False
-        )
-        keep = ~(np.isnan(v) | np.isnan(w))
-        if not keep.all():
-            v, w = v[keep], w[keep]
-        if v.shape[0]:
-            d.push(v, w)
-        return v.shape[0]
-
     return _grouped_build(
-        df, group_cols, [value_col, weight_col], _mk_tdigest(delta), feed
+        df,
+        group_cols,
+        [value_col, weight_col],
+        _mk_tdigest(delta),
+        lambda: _WeightedDigest(value_col, weight_col, delta),
     )
+
+
+# one shared NaN object: keys are dict keys, and NaN != NaN would split a
+# NaN key into one group per row (Spark's groupBy has one NaN group)
+_NAN = float("nan")
+
+
+def _key_groups(
+    table: pa.Table | pa.RecordBatch, group_cols: list[str]
+) -> list[tuple[tuple, pa.Table]]:
+    """Split one Arrow table by its group key: one hash ``group_by`` of
+    the row ids, then one ``take`` per key. Returns (key, rows) pairs in
+    first-seen key order, each key's rows in input order. Keys are tuples
+    of Python values; a null key is its own group, as in Spark's groupBy,
+    and the rows keep their Arrow types."""
+    table = pa.table(table)
+    if not table.num_rows:
+        return []
+    g = (
+        table.select(group_cols)
+        .append_column("__row", pa.array(np.arange(table.num_rows)))
+        .group_by(group_cols, use_threads=False)
+        .aggregate([("__row", "list")])
+    )
+    keys = zip(*(g.column(c).to_pylist() for c in group_cols))
+    rows = g.column("__row_list").combine_chunks()
+    return [
+        (
+            tuple(_NAN if v != v else v for v in key),
+            table if g.num_rows == 1 else table.take(ids.values),
+        )
+        for key, ids in zip(keys, rows)
+    ]
+
+
+def _ingest_by_key(
+    tables: Iterable[pa.Table | pa.RecordBatch],
+    group_cols: list[str],
+    make: Callable[[], Any],
+) -> dict[tuple, Any]:
+    """The per-key feed of every grouped build: split each table by key
+    (``_key_groups``) and hand each key's rows to that key's kernel,
+    ``make()`` on first sight, via ``.ingest(rows)``. Returns key ->
+    kernel."""
+    acc: dict[tuple, Any] = {}
+    for table in tables:
+        for key, sub in _key_groups(table, group_cols):
+            if key not in acc:
+                acc[key] = make()
+            acc[key].ingest(sub)
+    return acc
 
 
 def _grouped_build(
@@ -556,70 +611,50 @@ def _grouped_build(
     group_cols: list[str],
     value_cols: list[str],
     spec: SketchSpec,
-    feed: Callable[[Any, Any], int],
+    make: Callable[[], Any],
 ) -> DataFrame:
-    """Grouped two-phase scaffold: per-(partition, key) partial states via
-    ``mapInPandas``, then only the states shuffle to a per-key
-    deterministic fold (``groupBy(keys).applyInPandas``). ``feed(sketch,
-    sub)`` ingests one key's rows of one pandas batch and returns the rows
-    it counts toward the key's ``rows``.
+    """Grouped two-phase scaffold, all in Arrow: ``mapInArrow`` feeds
+    each partition's batches through ``_ingest_by_key`` into one
+    ``make()`` kernel per key (``PartialSketches`` or ``_WeightedDigest``:
+    ``ingest`` / ``rows`` / one-entry ``states()``), then only the states
+    shuffle to a per-key deterministic fold
+    (``groupBy(keys).applyInArrow``).
 
     Returns DataFrame[group_cols..., state binary, rows long] — group keys
     keep their NATIVE Spark types."""
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    sel = df.select(*group_cols, *value_cols)
-    part_schema = (
-        ", ".join(
-            f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
-        )
-        + ", state binary, rows long"
+    part_type = StructType(
+        [df.schema[c] for c in group_cols]
+        + [StructField("state", BinaryType()), StructField("rows", LongType())]
     )
+    # the Arrow types Spark checks UDF output against (a timestamp key
+    # arrives with the session time zone but must leave as UTC)
+    part_schema = to_arrow_schema(part_type)
 
-    def partial(pdfs: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # sketches keyed by group tuple, accumulated across all batches of
-        # this partition; grouping itself is pandas-vectorized (hash groupby)
-        acc: dict[tuple, Any] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in pdfs:
-            # dropna=False: a NULL group key is a real group (Spark's own
-            # groupBy keeps it; pandas' default silently drops the rows)
-            for kr, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(kr, tuple):
-                    kr = (kr,)
-                if kr not in acc:
-                    acc[kr] = spec.make()
-                    counts[kr] = 0
-                counts[kr] += feed(acc[kr], sub)
-        if acc:
-            ks = list(acc.keys())
-            out = {
-                # null group keys (None, or NaN from pandas' null coding)
-                # stay NULL in the output — Spark's groupBy keeps the null
-                # group in the merge phase, same as its own aggregations;
-                # non-null keys pass through with their native values
-                c: [
-                    None if (k[i] is None or k[i] != k[i]) else k[i]
-                    for k in ks
-                ]
-                for i, c in enumerate(group_cols)
-            }
-            out["state"] = [acc[k].to_bytes() for k in ks]
-            out["rows"] = [counts[k] for k in ks]
-            yield pd.DataFrame(out)
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc = _ingest_by_key(batches, group_cols, make)
+        rows = [
+            dict(zip(group_cols, key), state=kern.states()["state_s"], rows=kern.rows)
+            for key, kern in acc.items()
+        ]
+        yield pa.RecordBatch.from_pylist(rows, schema=part_schema)
 
-    parts = sel.mapInPandas(partial, part_schema)
-
-    def final_merge(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def final_merge(table: pa.Table) -> pa.Table:
         # shared deterministic balanced fold: O(log P) recompression depth
         # per key (a linear left fold recompresses O(P) times sequentially)
-        merged = fold_states([bytes(b) for b in pdf["state"]], spec)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["state"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(out)
+        row = {c: table.column(c)[0].as_py() for c in group_cols}
+        row["state"] = fold_states(table.column("state").to_pylist(), spec)
+        row["rows"] = sum(table.column("rows").to_pylist())
+        return pa.Table.from_pylist([row], schema=part_schema)
 
-    return parts.groupBy(*group_cols).applyInPandas(final_merge, part_schema)
+    return (
+        df.select(*group_cols, *value_cols)
+        .mapInArrow(partial, part_type)
+        .groupBy(*group_cols)
+        .applyInArrow(final_merge, part_type)
+    )
 
 
 def tree_merge_states(
@@ -673,36 +708,19 @@ def build_sketch_grouped(
     column: str,
     spec: SketchSpec,
 ) -> DataFrame:
-    """Grouped two-phase aggregate: per-(partition, key) partial states built
-    vectorized, then only the tiny states shuffle to a per-key merge
-    (``groupBy(keys).applyInPandas``). Raw rows never shuffle — at 100 TB the
-    exchange moves #partitions × #keys × O(16 KB), not the data.
+    """Grouped two-phase aggregate: per-(partition, key) partial states,
+    each key's rows fed to its own ``PartialSketches`` (the ungrouped
+    kernel), then only the tiny states shuffle to a per-key merge
+    (``groupBy(keys).applyInArrow``). Raw rows never shuffle — at 100 TB
+    the exchange moves #partitions × #keys × O(16 KB), not the data.
 
     Returns DataFrame[group_cols..., state binary, rows long] — group keys
     keep their NATIVE Spark types (round 1 stringified them, losing key
     types on output)."""
-    is_list = df.schema[column].dataType.typeName() == "array"
-
-    def feed(sk, sub) -> int:
-        if is_list:
-            arrs = [a for a in sub[column].to_numpy() if a is not None]
-            vals = np.concatenate(arrs) if arrs else np.empty(0)
-        else:
-            vals = sub[column].to_numpy()
-            if vals.dtype.kind == "f":
-                # nullable numerics arrive as float64 + NaN; the batch path
-                # drops nulls (_column_values) — the grouped path must
-                # match or results diverge
-                vals = vals[~np.isnan(vals)]
-            elif vals.dtype == object:
-                vals = np.asarray(
-                    [v for v in vals if v is not None], dtype=object
-                )
-        if vals.shape[0]:
-            spec.update(sk, vals)
-        return len(sub)
-
-    return _grouped_build(df, group_cols, [column], spec, feed)
+    return _grouped_build(
+        df, group_cols, [column], spec,
+        lambda: PartialSketches({"s": (column, spec)}),
+    )
 
 
 def _mk_bottomk(k: int = 1024, strings: bool = False):

@@ -30,15 +30,13 @@ import time
 from dataclasses import dataclass
 from typing import Any, Iterable, Iterator
 
-import numpy as np
-
 from .aggregate import (
     PartialSketches,
     SketchSpec,
     _column_values,
+    _ingest_by_key,
     fold_states,
     merge_partials,
-    sorted_and_agg,
 )
 
 __all__ = [
@@ -228,81 +226,27 @@ def build_sketch_grouped_scan(
     partitions: int | None = None,
 ) -> dict[str, Any]:
     """Grouped sketch build on the scan-in-worker fast path: each task
-    reads its row-group splits with pyarrow, partitions rows by the group
-    key with one vectorized argsort per split, and keeps ONE sketch per
-    key for the whole partition. Only (key, state) pairs return to the
-    driver — #partitions x #keys x O(state) bytes, never rows. Intended
-    for low-cardinality keys (source, language, shard); high-cardinality
-    grouping belongs to aggregate.build_sketch_grouped's shuffle.
+    reads its row-group splits with pyarrow and feeds them through
+    ``_ingest_by_key`` — the per-key feed of the DataFrame grouped builds
+    — into ONE ``PartialSketches`` per key for the whole partition. Only
+    (key, state) pairs return to the driver — #partitions x #keys x
+    O(state) bytes, never rows. Intended for low-cardinality keys (source,
+    language, shard); high-cardinality grouping belongs to
+    aggregate.build_sketch_grouped's shuffle.
 
-    Returns {key: sketch object} (keys stringified)."""
+    Returns {key: sketch object}: keys stringified, a null key as None."""
     paths = _normalize_paths(paths)
     splits = parquet_splits(paths, target_rows_per_split)
+    cols = [group_col, column]
 
-    def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str, bytes]]:
-        import pyarrow.parquet as pq
-
-        sks: dict[str, Any] = {}
-        is_list = None
-        for sp in it:
-            tbl = pq.ParquetFile(sp.path).read_row_groups(
-                list(sp.row_groups), columns=[group_col, column],
-                use_threads=False,
-            )
-            if tbl.num_rows == 0:
-                continue  # empty part file -> empty split (valid input)
-            keys = np.asarray(
-                tbl.column(group_col).combine_chunks().to_pylist(), dtype=object
-            )
-            col = tbl.column(column).combine_chunks()
-            import pyarrow as pa
-
-            if is_list is None:
-                is_list = pa.types.is_list(col.type) or pa.types.is_large_list(
-                    col.type
-                )
-            order = np.argsort(keys, kind="stable")
-            sorted_keys = keys[order]
-            bounds = np.flatnonzero(
-                np.r_[True, sorted_keys[1:] != sorted_keys[:-1]]
-            )
-            bounds = np.r_[bounds, len(sorted_keys)]
-            if is_list:
-                offs = col.offsets.to_numpy(zero_copy_only=False)
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-            else:
-                vals_all = col.to_numpy(zero_copy_only=False)
-            for i in range(len(bounds) - 1):
-                rows_idx = order[bounds[i] : bounds[i + 1]]
-                key = str(sorted_keys[bounds[i]])
-                if is_list:
-                    # gather each row's token slice (vectorized concat of
-                    # per-row ranges via repeat/cumsum arithmetic)
-                    starts = offs[rows_idx]
-                    lens = offs[rows_idx + 1] - starts
-                    total = int(lens.sum())
-                    if total == 0:
-                        vals = np.empty(0, dtype=flat.dtype)
-                    else:
-                        idx = np.repeat(starts + lens - lens.cumsum(), lens) + np.arange(
-                            total
-                        )
-                        vals = flat[idx]
-                else:
-                    vals = vals_all[rows_idx]
-                if key not in sks:
-                    sks[key] = spec.make()
-                if vals.shape[0]:
-                    if spec.update_agg is not None and vals.dtype.kind in "iub":
-                        _, agg = sorted_and_agg(vals, True, False)
-                        if agg is not None:
-                            spec.update_agg(sks[key], *agg)
-                        else:
-                            spec.update(sks[key], vals)
-                    else:
-                        spec.update(sks[key], vals)
-        for key, sk in sks.items():
-            yield (key, sk.to_bytes())
+    def run_partition(it: Iterator[_Split]) -> Iterator[tuple[str | None, bytes]]:
+        acc = _ingest_by_key(
+            (_read_split(sp, cols, None) for sp in it),
+            [group_col],
+            lambda: PartialSketches({"s": (column, spec)}),
+        )
+        for (key,), part in acc.items():
+            yield (None if key is None else str(key), part.states()["state_s"])
 
     sc = spark.sparkContext
     if partitions is None:
@@ -317,5 +261,3 @@ def build_sketch_grouped_scan(
         .collect()
     )
     return {k: spec.from_bytes(v) for k, v in pairs}
-
-

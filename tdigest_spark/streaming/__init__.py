@@ -27,7 +27,7 @@ from typing import Any, Iterator
 
 import numpy as np
 
-from ..operators.aggregate import SketchSpec
+from ..operators.aggregate import SketchSpec, _column_values
 
 __all__ = [
     "incremental_build",
@@ -513,32 +513,6 @@ def dedup_stream(stream_df, id_cols: list[str], ts_col: str, delay: str = "1 hou
 # ---------------------------------------------------------------------------
 
 
-def _flat_values(series) -> "np.ndarray":
-    """pandas value column -> flat numpy values, matching the batch path's
-    ``_column_values`` semantics (operators/aggregate.py): null rows are
-    dropped, ``array<T>`` rows are flattened, strings stay an object
-    array. The naive ``np.concatenate`` over an object column crashes on
-    scalar strings / None rows (0-d arrays), and NaN from nullable
-    numerics must never reach int-keyed sketch hashes."""
-    import pandas as pd
-
-    vals = series.to_numpy()
-    if vals.dtype != object:
-        if vals.dtype.kind == "f":
-            return vals[~np.isnan(vals)]
-        return vals
-    items = [v for v in vals if v is not None and v is not pd.NA]
-    if not items:
-        return np.empty(0, dtype=np.float64)
-    first = items[0]
-    if isinstance(first, str):
-        return np.asarray(items, dtype=object)
-    if np.ndim(first) == 0:
-        arr = np.asarray(items, dtype=np.float64)
-        return arr[~np.isnan(arr)]
-    return np.concatenate([np.asarray(v) for v in items])
-
-
 def _read_state_rows(state_dir) -> list[dict] | None:
     """Rows of the durable state table, or None if absent. Path-or-URI:
     routed through pyarrow.fs (plans/fsio) so state dirs work on object
@@ -664,6 +638,7 @@ def windowed_digests(
     digest state; closed windows are emitted and evicted by timeout.
     """
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import (
         GroupState,
@@ -724,7 +699,7 @@ def windowed_digests(
         else:
             sk, n = spec.make(), 0
         for pdf in pdfs:
-            arr = _flat_values(pdf["_val"])
+            arr = _column_values(pa.Array.from_pandas(pdf["_val"]))
             if arr.shape[0]:
                 spec.update(sk, arr)
                 n += arr.shape[0]

@@ -12,10 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from tdigest_spark.operators.aggregate import (
+    CMS_INTS,
     DDSKETCH_SPEC,
     HLL_INTS,
     KLL_SPEC,
     MG_SPEC,
+    MOMENTS_SPEC,
     TDIGEST,
     build_sketches,
 )
@@ -204,3 +206,58 @@ def test_grouped_scan_matches_grouped_dataframe_path(spark, seq_path):
     hll_df = build_sketch_grouped(df, ["source"], "n_tok", HLL_INTS(12))
     for r in hll_df.collect():
         assert hll_scan[r["source"]].to_bytes() == bytes(r["state"])
+
+    # counter-table CMS and moments merge exactly: bit-equal as well
+    for spec in (CMS_INTS(5, 8192, 0), MOMENTS_SPEC()):
+        scan = build_sketch_grouped_scan(
+            spark, str(seq_path), "source", "n_tok", spec,
+            target_rows_per_split=2_500,
+        )
+        grouped = build_sketch_grouped(df, ["source"], "n_tok", spec).collect()
+        assert set(scan) == {r["source"] for r in grouped}, spec.name
+        for r in grouped:
+            assert scan[r["source"]].to_bytes() == bytes(r["state"]), spec.name
+
+
+def test_grouped_scan_kll_rank_error(spark, seq_path):
+    """Grouped-scan KLL takes the shared sorted feed (``update_sorted``),
+    like the ungrouped kernel: per key, n is exact and every quantile
+    lands within KLL's rank-error bound of the exact per-key data."""
+    from tdigest_spark.operators.scan import build_sketch_grouped_scan
+
+    got = build_sketch_grouped_scan(
+        spark, str(seq_path), "source", "n_tok", KLL_SPEC(200),
+        target_rows_per_split=2_500,
+    )
+    rows = spark.read.parquet(str(seq_path)).select("source", "n_tok").collect()
+    exact: dict = {}
+    for r in rows:
+        exact.setdefault(r["source"], []).append(r["n_tok"])
+    assert set(got) == set(exact)
+    ps = np.array([0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99])
+    for key, vals in exact.items():
+        vals = np.sort(np.asarray(vals))
+        sk = got[key]
+        assert int(sk.n) == vals.size, key
+        q = sk.quantile(ps)
+        left = np.searchsorted(vals, q, side="left") / vals.size
+        right = np.searchsorted(vals, q, side="right") / vals.size
+        err = np.maximum(left - ps, 0) + np.maximum(ps - right, 0)
+        assert err.max() < 3.3 / 200, (key, err.max())
+
+
+def test_grouped_scan_null_key_is_own_group(spark, tmp_path):
+    """A null group key is its own group (key None) with the right n,
+    next to string keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tdigest_spark.operators.scan import build_sketch_grouped_scan
+
+    src = ["a", None, "b", None, "a", None, "b", "a"]
+    tbl = pa.table({"source": src, "n_tok": pa.array(range(len(src)), pa.int32())})
+    pq.write_table(tbl.slice(0, 5), tmp_path / "part-0.parquet")
+    pq.write_table(tbl.slice(5), tmp_path / "part-1.parquet")
+    got = build_sketch_grouped_scan(spark, str(tmp_path), "source", "n_tok", TDIGEST(0.01))
+    assert {k: int(v.n) for k, v in got.items()} == {"a": 3, "b": 2, None: 3}
+    assert sorted(got[None].quantile([0.0, 1.0])) == [1.0, 5.0]

@@ -395,6 +395,27 @@ def test_grouped_keys_keep_native_types(spark):
         assert d.n == len(exact)
 
 
+def test_grouped_double_key_nan_and_null_groups(spark):
+    """A double key keeps NaN and NULL apart, as Spark's own groupBy
+    does: keys and row counts equal ``df.groupBy("k").count()``."""
+    import math
+
+    df = spark.createDataFrame(
+        [(1.0, 1.0), (float("nan"), 2.0), (float("nan"), 3.0), (None, 4.0)],
+        "k double, v double",
+    ).coalesce(2)
+
+    def norm(k):
+        return "nan" if k is not None and math.isnan(k) else k
+
+    expect = {norm(r["k"]): r["count"] for r in df.groupBy("k").count().collect()}
+    got = build_sketch_grouped(df, ["k"], "v", TDIGEST(0.01)).collect()
+    assert {norm(r["k"]): r["rows"] for r in got} == expect
+    assert expect == {1.0: 1, "nan": 2, None: 1}
+    for r in got:
+        assert TDigest.from_bytes(bytes(r["state"])).n == r["rows"]
+
+
 def test_build_weighted_digest_grouped(spark):
     """Per-key weighted digests: mass = SUM(weight) per key, value/weight
     nulls drop jointly, and duplicate-heavy values give exact weighted

@@ -24,6 +24,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 AUDITS = {
     # query -> (min broadcasts, forbid sortmerge, require pushed filters)
     "q1_pricing_summary": (0, False, True),
+    # Bloom probe: the distinct keys are probed in mapInArrow against the
+    # broadcast filter bytes — one aggregation, no join, 1-col scan
+    "bloom_partkey_membership": (0, False, False),
     "q3_shipping_priority": (2, True, True),
     "q5_nation_revenue": (3, False, True),
     "events_type_stats": (0, False, False),
