@@ -5370,7 +5370,7 @@ def iceberg_table_stats_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = {
         "sf_dir": str(sf_dir),
         "src": _src_sig(f"{sf_dir}/documents.parquet"),
-        "version": 1,
+        "version": 2,
     }
     rows = None
     if marker.exists():
@@ -6287,7 +6287,7 @@ def doc_bloom_index_point_lookup(
     params = {
         "sf_dir": str(sf_dir),
         "src": _src_sig(f"{sf_dir}/documents.parquet"),
-        "version": 1,
+        "version": 2,
     }
     fresh = False
     if marker.exists():

@@ -422,21 +422,20 @@ def partials_df(df: DataFrame, sketches: dict[str, tuple[str, SketchSpec]]) -> D
     return sel.mapInArrow(build, schema_str)
 
 
-def fold_states(states: list[bytes], spec: SketchSpec) -> bytes:
+def fold_states(states: Iterable[bytes], spec: SketchSpec) -> bytes:
     """Deterministic balanced binary-tree fold of serialized states: sort
     by bytes first (result independent of collection order), then a fixed
-    pairing tree (merge is associative-after-sort). The one fold used by
-    every merge path — driver-side, scan-path groupByKey, tree rounds."""
+    pairing tree (merge is associative-after-sort). Each state is decoded
+    once and the result encoded once. The one fold used by every merge
+    path — driver-side, scan-path groupByKey, tree rounds."""
     states = sorted(states)
-    while len(states) > 1:
-        nxt = []
-        for i in range(0, len(states), 2):
-            if i + 1 < len(states):
-                nxt.append(spec.merge_bytes(states[i], states[i + 1]))
-            else:
-                nxt.append(states[i])
-        states = nxt
-    return states[0] if states else spec.make().to_bytes()
+    if len(states) < 2:
+        return states[0] if states else spec.make().to_bytes()
+    sks = [spec.from_bytes(s) for s in states]
+    while len(sks) > 1:
+        # merge returns self: pair (0, 1), (2, 3), ...; an odd last one waits
+        sks = [a.merge(b) for a, b in zip(sks[::2], sks[1::2])] + sks[len(sks) // 2 * 2:]
+    return sks[0].to_bytes()
 
 
 def merge_partials(

@@ -255,9 +255,7 @@ def build_sketch_grouped_scan(
         sc.parallelize(splits, max(partitions, 1))
         .mapPartitions(run_partition)
         .groupByKey()  # #keys x #partitions tiny state rows
-        .mapValues(
-            lambda states: fold_states(sorted(states), spec)
-        )
+        .mapValues(lambda states: fold_states(states, spec))
         .collect()
     )
     return {k: spec.from_bytes(v) for k, v in pairs}

@@ -29,15 +29,12 @@ per the frequency-moment leg of the sketch literature (AMS STOC'96).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .hashing import hash64
 
 __all__ = ["AMSF2"]
-
-_HEADER = struct.Struct("<4sIIQ")  # magic, depth, width, n_seen
 
 
 def _seeds(depth: int) -> np.ndarray:
@@ -46,6 +43,7 @@ def _seeds(depth: int) -> np.ndarray:
     return hash64(np.arange(1, depth + 1, dtype=np.uint64))
 
 
+@wire.Layout(b"AMS2", "<IIQ")  # depth, width, n_seen; counters
 class AMSF2:
     __slots__ = ("depth", "width", "n_seen", "counters")
 
@@ -101,21 +99,12 @@ class AMSF2:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        return (
-            _HEADER.pack(b"AMS1", self.depth, self.width, self.n_seen)
-            + self.counters.astype("<i8").tobytes()
-        )
+        params = (self.depth, self.width, self.n_seen)
+        return self._wire.pack(params, self.counters)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "AMSF2":
-        magic, depth, width, n_seen = _HEADER.unpack_from(data, 0)
-        if magic != b"AMS1":
-            raise ValueError("not an AMSF2 blob")
+        (depth, width, n_seen), (counters,) = cls._wire.unpack(data)
         sk = cls(depth=depth, width=width)
-        sk.n_seen = n_seen
-        sk.counters = (
-            np.frombuffer(data, dtype="<i8", count=depth * width, offset=_HEADER.size)
-            .reshape(depth, width)
-            .copy()
-        )
+        sk.n_seen, sk.counters = n_seen, counters.reshape(depth, width)
         return sk

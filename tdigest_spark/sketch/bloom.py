@@ -6,35 +6,24 @@ Spark cross-check oracle: df.stat.bloomFilter / exact membership."""
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
+from . import wire
 from .hashing import hash64_with_seed, hash_strings
 
 __all__ = ["BloomFilter"]
 
-_HEADER = struct.Struct("<4sQI q")  # magic, m_bits, k, n_added
 
-
+@wire.Layout(b"BLM2", "<QI")  # m_bits, k; bits
 class BloomFilter:
-    __slots__ = ("m_bits", "k", "bits", "n_added")
+    __slots__ = ("m_bits", "k", "bits")
 
     def __init__(self, expected_items: int = 1_000_000, fpp: float = 0.01):
         m = max(64, int(-expected_items * math.log(fpp) / (math.log(2) ** 2)))
         self.m_bits = (m + 63) // 64 * 64
         self.k = max(1, round(self.m_bits / expected_items * math.log(2)))
         self.bits = np.zeros(self.m_bits // 64, dtype=np.uint64)
-        self.n_added = 0
-
-    @classmethod
-    def _raw(cls, m_bits: int, k: int) -> "BloomFilter":
-        bf = cls.__new__(cls)
-        bf.m_bits = m_bits
-        bf.k = k
-        bf.bits = np.zeros(m_bits // 64, dtype=np.uint64)
-        bf.n_added = 0
-        return bf
 
     def _positions(self, ukeys: np.ndarray) -> np.ndarray:
         h1 = hash64_with_seed(ukeys, 0x51ED)
@@ -51,7 +40,6 @@ class BloomFilter:
         word = (pos >> np.uint64(6)).astype(np.int64)
         bit = np.uint64(1) << (pos & np.uint64(63))
         np.bitwise_or.at(self.bits, word, bit)
-        self.n_added += int(ukeys.shape[0])
         return self
 
     def add_ints(
@@ -89,23 +77,14 @@ class BloomFilter:
         if (other.m_bits, other.k) != (self.m_bits, self.k):
             raise ValueError("shape mismatch")
         np.bitwise_or(self.bits, other.bits, out=self.bits)
-        self.n_added += other.n_added
         return self
 
     def to_bytes(self) -> bytes:
-        return (
-            _HEADER.pack(b"BLM1", self.m_bits, self.k, self.n_added)
-            + self.bits.astype("<u8").tobytes()
-        )
+        return self._wire.pack((self.m_bits, self.k), self.bits)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
-        magic, m_bits, k, n_added = _HEADER.unpack_from(data, 0)
-        if magic != b"BLM1":
-            raise ValueError("not a Bloom blob")
-        bf = cls._raw(m_bits, k)
-        bf.bits = np.frombuffer(
-            data, dtype="<u8", count=m_bits // 64, offset=_HEADER.size
-        ).copy()
-        bf.n_added = n_added
+        (m_bits, k), (bits,) = cls._wire.unpack(data)
+        bf = cls.__new__(cls)
+        bf.m_bits, bf.k, bf.bits = m_bits, k, bits.reshape(m_bits // 64)
         return bf

@@ -20,17 +20,15 @@ Absent in the reference; companion per the training-pipeline requirement
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .hashing import hash64, hash_strings
 
 __all__ = ["BottomK"]
 
-_HEADER = struct.Struct("<4sIQc")  # magic, k, n_seen, priority family
 
-
+@wire.Layout(b"BTK3", "<IQc")  # k, n_seen, family; prios, values
 class BottomK:
     __slots__ = ("k", "n_seen", "prios", "values", "family")
 
@@ -156,33 +154,13 @@ class BottomK:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        head = _HEADER.pack(
-            b"BTK2", self.k, self.n_seen, (self.family or "?").encode()
-        )
-        return (
-            head
-            + struct.pack("<I", self.size)
-            + self.prios.astype("<u8").tobytes()
-            + self.values.astype("<i8").tobytes()
-        )
+        params = (self.k, self.n_seen, (self.family or "?").encode())
+        return self._wire.pack(params, self.prios, self.values)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BottomK":
-        magic, k, n_seen, fam = _HEADER.unpack_from(data, 0)
-        if magic == b"BTK1":
-            raise ValueError(
-                "stale BottomK format BTK1 (no priority-family tag): "
-                "rebuild the sketch state"
-            )
-        if magic != b"BTK2":
-            raise ValueError("not a BottomK blob")
-        off = _HEADER.size
-        (sz,) = struct.unpack_from("<I", data, off)
-        off += 4
+        (k, n_seen, fam), (prios, values) = cls._wire.unpack(data)
         sk = cls(k=k)
-        sk.n_seen = n_seen
-        sk.family = None if fam == b"?" else fam.decode()
-        sk.prios = np.frombuffer(data, dtype="<u8", count=sz, offset=off).copy()
-        off += 8 * sz
-        sk.values = np.frombuffer(data, dtype="<i8", count=sz, offset=off).copy()
+        sk.n_seen, sk.prios, sk.values = n_seen, prios, values
+        sk.family = None if fam == b"?" else fam.decode("latin-1")
         return sk

@@ -5,19 +5,16 @@ Spark cross-check oracle: df.stat.countMinSketch / exact GROUP BY counts."""
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .hashing import hash64_with_seed, hash_strings
 
 __all__ = ["CMS"]
 
-# magic, depth, width, total, n_heavy, k_heavy (CMS2 added k_heavy so serde
-# round-trips the heavy-hitter config; CMS1 blobs defaulted it to 64)
-_HEADER = struct.Struct("<4sII q I i")
 
-
+# depth, width, total, k_heavy; table, heavy keys, heavy counts
+@wire.Layout(b"CMS3", "<IIqi")
 class CMS:
     __slots__ = (
         "depth", "width", "table", "total", "heavy", "k_heavy", "_pending"
@@ -157,44 +154,16 @@ class CMS:
 
     def to_bytes(self) -> bytes:
         self._flush_pending()
-        head = _HEADER.pack(
-            b"CMS2", self.depth, self.width, self.total, len(self.heavy),
-            self.k_heavy,
-        )
-        hk = np.fromiter(self.heavy.keys(), dtype="<u8", count=len(self.heavy))
-        hv = np.fromiter(self.heavy.values(), dtype="<i8", count=len(self.heavy))
-        return (
-            head
-            + self.table.astype("<i8").tobytes()
-            + hk.tobytes()
-            + hv.tobytes()
-        )
+        hk = np.array(list(self.heavy), dtype=np.uint64)
+        hv = np.array(list(self.heavy.values()), dtype=np.int64)
+        params = (self.depth, self.width, self.total, self.k_heavy)
+        return self._wire.pack(params, self.table, hk, hv)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CMS":
-        magic, depth, width, total, nh, kh = _HEADER.unpack_from(data, 0)
-        if magic != b"CMS2":
-            if magic == b"CMS1":
-                # durable artifacts (checkpoint batches, streaming state
-                # dirs) written before the CMS2 header change: name the
-                # cause so operators rebuild state instead of suspecting
-                # corruption
-                raise ValueError(
-                    "stale CMS1 state format (pre-k_heavy header); rebuild "
-                    "the sketch/checkpoint with this version"
-                )
-            raise ValueError("not a CMS blob")
+        (depth, width, total, kh), (table, hk, hv) = cls._wire.unpack(data)
         c = cls(depth=depth, width=width, k_heavy=kh)
-        off = _HEADER.size
-        c.table = (
-            np.frombuffer(data, dtype="<i8", count=depth * width, offset=off)
-            .reshape(depth, width)
-            .copy()
-        )
-        off += 8 * depth * width
-        hk = np.frombuffer(data, dtype="<u8", count=nh, offset=off)
-        off += 8 * nh
-        hv = np.frombuffer(data, dtype="<i8", count=nh, offset=off)
+        c.table = table.reshape(depth, width)
         c.total = total
-        c.heavy = {int(k): int(v) for k, v in zip(hk, hv)}
+        c.heavy = dict(zip(hk.tolist(), hv.tolist()))
         return c

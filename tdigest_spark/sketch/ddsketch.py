@@ -21,16 +21,16 @@ store would trade the relative-error guarantee on the low tail.
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
+from . import wire
+
 __all__ = ["DDSketch"]
 
-_HEADER = struct.Struct("<4sdqqqiqi")
-# magic, alpha, n, zero_count, pos_offset, pos_len, neg_offset, neg_len
 
-
+# alpha, n, zero_count, pos_offset, neg_offset; pos store, neg store
+@wire.Layout(b"DDS2", "<dqqqq")
 class DDSketch:
     __slots__ = ("alpha", "gamma", "log_gamma", "n", "zero_count",
                  "pos_offset", "pos", "neg_offset", "neg")
@@ -184,23 +184,13 @@ class DDSketch:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        head = _HEADER.pack(b"DDS1", self.alpha, self.n, self.zero_count,
-                            self.pos_offset, self.pos.shape[0],
-                            self.neg_offset, self.neg.shape[0])
-        return head + self.pos.astype("<i8").tobytes() + self.neg.astype("<i8").tobytes()
+        params = (self.alpha, self.n, self.zero_count, self.pos_offset, self.neg_offset)
+        return self._wire.pack(params, self.pos, self.neg)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "DDSketch":
-        magic, alpha, n, zc, poff, plen, noff, nlen = _HEADER.unpack_from(data, 0)
-        if magic != b"DDS1":
-            raise ValueError("not a DDSketch blob")
-        off = _HEADER.size
+        (alpha, n, zc, poff, noff), (pos, neg) = cls._wire.unpack(data)
         sk = cls(alpha=alpha)
-        sk.n = n
-        sk.zero_count = zc
-        sk.pos_offset = poff
-        sk.pos = np.frombuffer(data, dtype="<i8", count=plen, offset=off).copy()
-        off += 8 * plen
-        sk.neg_offset = noff
-        sk.neg = np.frombuffer(data, dtype="<i8", count=nlen, offset=off).copy()
+        sk.n, sk.zero_count = n, zc
+        sk.pos_offset, sk.pos, sk.neg_offset, sk.neg = poff, pos, noff, neg
         return sk

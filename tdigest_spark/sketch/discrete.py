@@ -20,17 +20,15 @@ Re-derivation of the reference's ``delta === false`` discrete mode
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .tdigest import TDigest
 
 __all__ = ["DiscreteDigest", "AutoDigest"]
 
-_MAGIC = struct.Struct("<4sB3x")  # b"DDG1", kind: 0=numeric, 1=string
 
-
+@wire.Layout(b"DDG2", "<?")  # is_string; counts, then values (or strings)
 class DiscreteDigest:
     """Exact discrete digest: sorted unique values + counts."""
 
@@ -152,51 +150,19 @@ class DiscreteDigest:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        head = _MAGIC.pack(b"DDG1", 1 if self.is_string else 0)
-        cnt = self.counts.astype("<f8").tobytes()
-        if self.is_string:
-            enc = [str(v).encode("utf-8") for v in self.values]
-            lens = np.array([len(b) for b in enc], dtype="<u4")
-            payload = (
-                struct.pack("<I", len(enc))
-                + lens.tobytes()
-                + b"".join(enc)
-                + cnt
-            )
-        else:
-            payload = (
-                struct.pack("<I", self.size)
-                + self.values.astype("<f8").tobytes()
-                + cnt
-            )
-        return head + payload
+        vals = wire.strings(self.values) if self.is_string else (self.values,)
+        return self._wire.pack((self.is_string,), self.counts, *vals)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "DiscreteDigest":
-        magic, kind = _MAGIC.unpack_from(data, 0)
-        if magic != b"DDG1":
-            raise ValueError("not a DiscreteDigest blob")
-        off = _MAGIC.size
-        (c,) = struct.unpack_from("<I", data, off)
-        off += 4
-        dd = cls(is_string=kind == 1)
-        if kind == 1:
-            lens = np.frombuffer(data, dtype="<u4", count=c, offset=off)
-            off += 4 * c
-            vals = []
-            for ln in lens:
-                vals.append(data[off : off + ln].decode("utf-8"))
-                off += int(ln)
-            dd.values = np.asarray(vals, dtype=object)
-        else:
-            dd.values = np.frombuffer(
-                data, dtype="<f8", count=c, offset=off
-            ).copy()
-            off += 8 * c
-        dd.counts = np.frombuffer(data, dtype="<f8", count=c, offset=off).copy()
+        (is_string,), (counts, *vals) = cls._wire.unpack(data)
+        dd = cls(is_string=is_string)
+        dd.counts = counts
+        dd.values = wire.unstrings(*vals) if is_string else vals[0]
         return dd
 
 
+@wire.Layout(b"ADG2", "<4sddI")  # mode, delta, ratio, thresh; inner state
 class AutoDigest:
     """Reference ``Digest`` wrapper: exact discrete until the sample looks
     continuous, then t-digest (tdigest.js:339-388).
@@ -288,37 +254,16 @@ class AutoDigest:
         return self.inner.cdf(x)
 
     def to_bytes(self) -> bytes:
-        head = struct.pack(
-            "<4sB3xd dI",
-            b"ADG1",
-            {"auto": 0, "disc": 1, "cont": 2}[self.mode],
-            self.delta,
-            self.ratio,
-            self.thresh,
-        )
-        return head + self.inner.to_bytes()
+        params = (self.mode.encode(), self.delta, self.ratio, self.thresh)
+        inner = np.frombuffer(self.inner.to_bytes(), dtype=np.uint8)
+        return self._wire.pack(params, inner)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "AutoDigest":
-        magic, mode_b, delta, ratio, thresh = struct.unpack_from(
-            "<4sB3xd dI", data, 0
-        )
-        if magic != b"ADG1":
-            raise ValueError("not an AutoDigest blob")
-        off = struct.calcsize("<4sB3xd dI")
-        ad = cls(
-            mode={0: "auto", 1: "disc", 2: "cont"}[mode_b],
-            delta=delta,
-            ratio=ratio,
-            thresh=thresh,
-        )
-        inner_blob = data[off:]
-        from .tdigest import _MAGIC as _TD_MAGIC
-
-        if inner_blob[:4] == _TD_MAGIC:
-            ad.inner = TDigest.from_bytes(inner_blob)
-            ad.switched = True
-        else:
-            ad.inner = DiscreteDigest.from_bytes(inner_blob)
-            ad.switched = False
+        (mode, delta, ratio, thresh), (inner,) = cls._wire.unpack(data)
+        ad = cls(mode=mode.decode("latin-1"), delta=delta, ratio=ratio, thresh=thresh)
+        ad.inner = wire.decode(inner.tobytes())
+        if not isinstance(ad.inner, (TDigest, DiscreteDigest)):
+            raise ValueError(f"AutoDigest cannot hold a {type(ad.inner).__name__}")
+        ad.switched = ad.is_continuous
         return ad

@@ -8,17 +8,15 @@ Spark cross-check oracle: approx_count_distinct / exact countDistinct."""
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .hashing import hash64, hash_strings
 
 __all__ = ["HLL"]
 
-_HEADER = struct.Struct("<4sB3x")  # b"HLL1", p
 
-
+@wire.Layout(b"HLL2", "<B")  # p; registers
 class HLL:
     __slots__ = ("p", "m", "registers")
 
@@ -81,17 +79,13 @@ class HLL:
         return float(est)
 
     def to_bytes(self) -> bytes:
-        return _HEADER.pack(b"HLL1", self.p) + self.registers.tobytes()
+        return self._wire.pack((self.p,), self.registers)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "HLL":
-        magic, p = _HEADER.unpack_from(data, 0)
-        if magic != b"HLL1":
-            raise ValueError("not an HLL blob")
+        (p,), (registers,) = cls._wire.unpack(data)
         h = cls(p=p)
-        h.registers = np.frombuffer(
-            data, dtype=np.uint8, count=h.m, offset=_HEADER.size
-        ).copy()
+        h.registers = registers.reshape(h.m)
         return h
 
 

@@ -7,13 +7,11 @@ Cross-check oracles: exact numpy quantiles at test scale."""
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-__all__ = ["KLL"]
+from . import wire
 
-_HEADER = struct.Struct("<4sIqI")  # magic, k, n, n_levels
+__all__ = ["KLL"]
 
 
 def _capacity(k: int, level: int, top: int) -> int:
@@ -21,6 +19,7 @@ def _capacity(k: int, level: int, top: int) -> int:
     return max(int(np.ceil(k * (2.0 / 3.0) ** (top - level))), 8)
 
 
+@wire.Layout(b"KLL2", "<Iqq")  # k, n, parity; one array per level
 class KLL:
     __slots__ = ("k", "n", "levels", "parity")
 
@@ -161,30 +160,11 @@ class KLL:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        head = _HEADER.pack(b"KLL1", self.k, self.n, len(self.levels))
-        parts = [head, struct.pack("<q", self.parity)]
-        for buf in self.levels:
-            parts.append(struct.pack("<I", buf.shape[0]))
-            parts.append(buf.astype("<f8").tobytes())
-        return b"".join(parts)
+        return self._wire.pack((self.k, self.n, self.parity), *self.levels)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "KLL":
-        magic, k, n, nl = _HEADER.unpack_from(data, 0)
-        if magic != b"KLL1":
-            raise ValueError("not a KLL blob")
-        off = _HEADER.size
-        (parity,) = struct.unpack_from("<q", data, off)
-        off += 8
+        (k, n, parity), levels = cls._wire.unpack(data)
         sk = cls(k=k)
-        sk.n = n
-        sk.parity = parity
-        sk.levels = []
-        for _ in range(nl):
-            (c,) = struct.unpack_from("<I", data, off)
-            off += 4
-            sk.levels.append(
-                np.frombuffer(data, dtype="<f8", count=c, offset=off).copy()
-            )
-            off += 8 * c
+        sk.n, sk.parity, sk.levels = n, parity, levels
         return sk

@@ -24,15 +24,15 @@ assert the bounds, not byte equality (same policy as t-digest/KLL).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from . import wire
 
 __all__ = ["MisraGries"]
 
-_HEADER = struct.Struct("<4sIqqcI")  # magic, k, n, err, kind, n_counters
 
-
+# k, n, err, kind; counts, then keys (int64, or a string column)
+@wire.Layout(b"MGS2", "<Iqqc")
 class MisraGries:
     __slots__ = ("k", "n", "err", "counters", "kind")
 
@@ -183,31 +183,18 @@ class MisraGries:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        kind = (self.kind or "?").encode()
-        head = _HEADER.pack(b"MGS1", self.k, self.n, self.err, kind,
-                            len(self.counters))
-        parts = [head]
-        for v, c in sorted(self.counters.items()):
-            key = struct.pack("<q", v) if self.kind == "i" else str(v).encode()
-            parts.append(struct.pack("<Iq", len(key), c))
-            parts.append(key)
-        return b"".join(parts)
+        keys = sorted(self.counters)
+        counts = np.array([self.counters[v] for v in keys], dtype=np.int64)
+        cols = wire.strings(keys) if self.kind == "s" else [np.array(keys, dtype=np.int64)]
+        params = (self.k, self.n, self.err, (self.kind or "?").encode())
+        return self._wire.pack(params, counts, *cols)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "MisraGries":
-        magic, k, n, err, kind, nc = _HEADER.unpack_from(data, 0)
-        if magic != b"MGS1":
-            raise ValueError("not a MisraGries blob")
+        (k, n, err, kind), (counts, *cols) = cls._wire.unpack(data)
         sk = cls(k=k)
-        sk.n = n
-        sk.err = err
-        sk.kind = None if kind == b"?" else kind.decode()
-        off = _HEADER.size
-        for _ in range(nc):
-            klen, c = struct.unpack_from("<Iq", data, off)
-            off += 12
-            raw = data[off: off + klen]
-            off += klen
-            key = struct.unpack("<q", raw)[0] if sk.kind == "i" else raw.decode()
-            sk.counters[key] = c
+        sk.n, sk.err = n, err
+        sk.kind = None if kind == b"?" else kind.decode("latin-1")
+        keys = wire.unstrings(*cols) if sk.kind == "s" else cols[0].tolist()
+        sk.counters = dict(zip(keys, counts.tolist()))
         return sk

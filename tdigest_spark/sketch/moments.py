@@ -32,15 +32,16 @@ moments-sketch paper above.
 from __future__ import annotations
 
 import math
-import struct
 
 import numpy as np
 
+from . import wire
+
 __all__ = ["MomentsSketch"]
 
-_HEADER = struct.Struct("<4sI")  # magic, k
 
-
+# k; n and the k power sums as decimal strings (exact at any magnitude)
+@wire.Layout(b"MOM2", "<I")
 class MomentsSketch:
     """Exact (n, Σx¹..Σxᵏ) over integer values; default k=4."""
 
@@ -112,30 +113,12 @@ class MomentsSketch:
 
     # ------------------------------------------------------------------ serde
 
-    @staticmethod
-    def _enc(x: int) -> bytes:
-        # length-prefixed signed little-endian: exact at ANY magnitude
-        # (Σ|x|⁴ of int64 inputs reaches 2^160+, past any fixed width);
-        # typical states are still ~90 bytes
-        n = x.bit_length() // 8 + 1  # +1 keeps room for the sign bit
-        return struct.pack("<I", n) + x.to_bytes(n, "little", signed=True)
-
     def to_bytes(self) -> bytes:
-        body = b"".join(self._enc(v) for v in (self.n, *self.sums))
-        return _HEADER.pack(b"MOM1", self.k) + body
+        return self._wire.pack((self.k,), *wire.strings([self.n, *self.sums]))
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "MomentsSketch":
-        magic, k = _HEADER.unpack_from(data, 0)
-        if magic != b"MOM1":
-            raise ValueError("not a MomentsSketch blob")
-        off = _HEADER.size
-        vals = []
-        for _ in range(k + 1):
-            (ln,) = struct.unpack_from("<I", data, off)
-            off += 4
-            vals.append(int.from_bytes(data[off : off + ln], "little", signed=True))
-            off += ln
+        (k,), cols = cls._wire.unpack(data)
         sk = cls(k=k)
-        sk.n, sk.sums = vals[0], vals[1:]
+        sk.n, *sk.sums = [int(v) for v in wire.unstrings(*cols)]
         return sk

@@ -29,17 +29,11 @@ implementation of the published algorithm.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-__all__ = ["TDigest"]
+from . import wire
 
-_MAGIC = b"TDG2"
-# header: magic, mode(u1, 0=continuous), pad(3), delta f8, K f8, n f8,
-# min f8, max f8, ncentroids u4 -> then means <f8[C], weights <f8[C]
-# (TDG2 added K so a custom compression trigger survives serde/merge)
-_HEADER = struct.Struct("<4sB3xddddd I")
+__all__ = ["TDigest"]
 
 
 def _capacity_merge(
@@ -97,6 +91,7 @@ def _coalesce_sorted(
     return means[idx], np.add.reduceat(weights, idx)
 
 
+@wire.Layout(b"TDG3", "<ddddd")  # delta, K, n, min, max; means, weights
 class TDigest:
     """Continuous-mode t-digest over float64 values.
 
@@ -330,41 +325,16 @@ class TDigest:
     # ------------------------------------------------------------------ serde
 
     def to_bytes(self) -> bytes:
-        head = _HEADER.pack(
-            _MAGIC, 0, self.delta, float(self.K), self.n,
-            self.vmin if self.size else np.nan,
-            self.vmax if self.size else np.nan,
-            self.size,
-        )
-        # explicit little-endian payload: every other sketch serializer
-        # normalizes with astype('<'); native order would not round-trip
-        # on big-endian hosts or across mixed-endian clusters
-        return (
-            head
-            + self.means.astype("<f8", copy=False).tobytes()
-            + self.weights.astype("<f8", copy=False).tobytes()
-        )
+        ends = (self.vmin, self.vmax) if self.size else (np.nan, np.nan)
+        params = (self.delta, self.K, self.n, *ends)
+        return self._wire.pack(params, self.means, self.weights)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "TDigest":
-        magic, mode, delta, K, n, vmin, vmax, c = _HEADER.unpack_from(data, 0)
-        if magic == b"TDG1":
-            # durable artifacts written before the TDG2 header (which added
-            # K) fail loudly with the cause, not a generic parse error
-            raise ValueError(
-                "stale TDG1 state format (pre-K header); rebuild the "
-                "sketch/checkpoint with this version"
-            )
-        if magic != _MAGIC or mode != 0:
-            raise ValueError("not a TDigest blob")
+        (delta, K, n, vmin, vmax), (means, weights) = cls._wire.unpack(data)
         td = cls(delta=delta, K=K)
-        off = _HEADER.size
-        td.means = np.frombuffer(data, dtype="<f8", count=c, offset=off).copy()
-        off += 8 * c
-        td.weights = np.frombuffer(data, dtype="<f8", count=c, offset=off).copy()
-        td.n = n
-        td.vmin = vmin if c else np.inf
-        td.vmax = vmax if c else -np.inf
+        td.means, td.weights, td.n = means, weights, n
+        td.vmin, td.vmax = (vmin, vmax) if means.size else (np.inf, -np.inf)
         return td
 
     def __repr__(self) -> str:  # pragma: no cover

@@ -38,18 +38,18 @@ in shard A but not shard B" at 10^12 scale without a distinct join.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
+from . import wire
 from .bottomk import BottomK
 
 __all__ = ["ThetaSketch"]
 
 _TWO64 = 2.0**64
-_HEADER = struct.Struct("<4sIQQc")  # magic, k, theta(+1 sentinel), n_seen, family
 
 
+# k, theta - 1 (2^64 does not fit a u8), n_seen, family; prios
+@wire.Layout(b"THS2", "<IQQc")
 class ThetaSketch:
     """Compact theta form: ``theta`` in (0, 2^64], ``prios`` sorted
     ascending, all strictly below theta. Build via :meth:`from_bottomk`
@@ -189,23 +189,13 @@ class ThetaSketch:
     # ------------------------------------------------------------- serde
 
     def to_bytes(self) -> bytes:
-        # theta stored minus one (2^64 does not fit u64; theta > 0 always)
-        head = _HEADER.pack(
-            b"THS1", self.k, self.theta - 1, self.n_seen,
-            (self.family or "?").encode(),
-        )
-        return head + struct.pack("<I", self.size) + self.prios.astype("<u8").tobytes()
+        fam = (self.family or "?").encode()
+        return self._wire.pack((self.k, self.theta - 1, self.n_seen, fam), self.prios)
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "ThetaSketch":
-        magic, k, theta_m1, n_seen, fam = _HEADER.unpack_from(data, 0)
-        if magic != b"THS1":
-            raise ValueError("not a ThetaSketch blob")
-        off = _HEADER.size
-        (sz,) = struct.unpack_from("<I", data, off)
-        off += 4
-        prios = np.frombuffer(data, dtype="<u8", count=sz, offset=off).copy()
+        (k, theta_m1, n_seen, fam), (prios,) = cls._wire.unpack(data)
         return cls(
             k=k, theta=theta_m1 + 1, prios=prios, n_seen=n_seen,
-            family=None if fam == b"?" else fam.decode(),
+            family=None if fam == b"?" else fam.decode("latin-1"),
         )

@@ -110,6 +110,28 @@ def test_scan_partition_coalescing_invariant(spark, seq_path):
         assert again[name].to_bytes() == many[name].to_bytes(), name
 
 
+
+def test_scan_bloom_state_independent_of_split_layout(spark, seq_path, tmp_path):
+    """A Bloom filter is a set of bits, so its state bytes must not depend
+    on how the same rows are cut into splits and partitions: one split of
+    eight row groups in one partition against eight one-row-group splits
+    over eight partitions."""
+    import pyarrow.parquet as pq
+
+    from tdigest_spark.operators.aggregate import BLOOM_INTS
+
+    one_file = tmp_path / "seq.parquet"
+    pq.write_table(pq.read_table(str(seq_path)), one_file, row_group_size=2_500)
+    sk = {"bloom": ("tokens", BLOOM_INTS(100_000))}
+    one = build_sketches_scan(
+        spark, [str(one_file)], sk, target_rows_per_split=20_000, partitions=1
+    )
+    eight = build_sketches_scan(
+        spark, [str(one_file)], sk, target_rows_per_split=2_500, partitions=8
+    )
+    assert len(parquet_splits([str(one_file)], 2_500)) == 8
+    assert one["bloom"].to_bytes() == eight["bloom"].to_bytes()
+
 def test_scan_filter_pushdown(spark, seq_path):
     out = build_sketches_scan(
         spark,
